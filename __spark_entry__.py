@@ -21,13 +21,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str,
        expensive: bool = True) -> DataFrame:
     from scrapy_processors_spark.session import read_table
 
-    # Scale-adaptive keyed fan-out (guide §2.2/§6): the testdata tables
-    # arrive as single-row-group files, which plan ONE scan task regardless
-    # of session width; hash-repartition on the table key to the slot count
-    # only when the scan is narrower than the session.  No-op on
-    # already-parallel (warehouse-scale) scans.  ``expensive=False`` skips
-    # the fan-out for cheap single-pass codegen queries where the exchange
-    # costs more than the serial loss (see session.read_table).
+    # Keyed scan fan-out when the file has fewer row groups than slots;
+    # ``expensive=False`` keeps cheap codegen queries at natural width.
     return read_table(spark, sf_dir, name, expensive=expensive)
 
 

@@ -8,7 +8,8 @@ Usage:
 
 Times each named query (default: every declared query) with the noop sink
 on the same session shape bench.py uses (local[min(cpus,16)],
-shuffle_partitions=cpus-capped), printing per-rep seconds and the min.
+shuffle_partitions=cpus-capped), printing per-rep seconds, the first
+(cold: codegen and JIT included) and the min.
 With --plans, writes <query><suffix>.txt explain("formatted") files.
 """
 
@@ -65,7 +66,8 @@ def main():
             df.write.format("noop").mode("overwrite").save()
             samples.append(round(time.time() - t0, 3))
         spark.sparkContext.setJobDescription(None)
-        out[name] = {"min": min(samples), "samples": samples}
+        out[name] = {"min": min(samples), "first": samples[0],
+                     "samples": samples}
         print(f"{name}: {samples} -> min {min(samples)}", flush=True)
     print(json.dumps({"sf": args.sf, "reps": args.reps,
                       "total_min": round(sum(v["min"] for v in out.values()), 3),

@@ -18,12 +18,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str,
        expensive: bool = True) -> DataFrame:
     from scrapy_processors_spark.session import read_table
 
-    # Scale-adaptive keyed scan fan-out — see session.read_table/fan_out.
-    # expensive=False: keep the natural scan width for pipelines whose
-    # kernels are batch-vectorized numpy (embeddings paths) — their CPU
-    # per byte is codegen-class, so the fan-out exchange costs more than
-    # the serial loss (measured at sf0.1 AND sf1.0: ann_lsh 0.9/1.3 s
-    # natural vs 1.9/1.9 s fanned).
+    # Keyed scan fan-out, see session.read_table.  expensive=False for the
+    # batch-vectorized numpy embeddings paths (measured at sf0.1 and sf1.0:
+    # ann_lsh 0.9/1.3 s at natural width vs 1.9/1.9 s fanned).
     return read_table(spark, sf_dir, name, expensive=expensive)
 
 

@@ -72,22 +72,6 @@ def _hyperplane(dim: int, seed: int) -> list:
     return vals
 
 
-def lsh_bucket(vec, planes) -> "F.Column":
-    """Signed-projection bucket id: bit p = sign(<vec, plane_p>)."""
-    bits = []
-    for p, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(vec, F.array(*[F.lit(float(x)) for x in plane]),
-                       lambda a, b: a.cast("double") * b),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
 def _recall_vs_exact(exact: DataFrame, approx: DataFrame) -> float:
     """|approx ∩ exact| / |exact| over (query_id, cand_id) pairs."""
     n_exact = exact.count()

@@ -20,7 +20,7 @@ from scrapy_processors_spark.frontier.canonicalize import (
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from scrapy_processors_spark.session import read_table
 
-    # Scale-adaptive keyed scan fan-out — see session.read_table/fan_out.
+    # Scale-adaptive keyed scan fan-out — see session.read_table.
     return read_table(spark, sf_dir, name)
 
 

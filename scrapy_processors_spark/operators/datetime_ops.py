@@ -75,6 +75,21 @@ def _tz_name(value: Union[str, Any]) -> str:
     return value if isinstance(value, str) else str(value)
 
 
+def _localize_standard(local: Column, tz_name: str) -> Column:
+    """Wall time in ``tz_name`` -> UTC, as ``pytz.localize(is_dst=False)``.
+
+    In a fall-back overlap ``to_utc_timestamp`` takes the daylight offset
+    (New York "2015-11-01 01:15:52" -> 05:15:52Z) where pytz takes standard
+    time (06:15:52Z): the later reading, i.e. the offset in force a day on,
+    wins when it round-trips to the same wall time.  In a spring-forward
+    gap both already use the pre-transition offset (02:30 -> 07:30Z)."""
+    day = F.expr("INTERVAL 1 DAY")
+    earlier = F.to_utc_timestamp(local, tz_name)
+    later = F.to_utc_timestamp(local + day, tz_name) - day
+    return F.when(F.from_utc_timestamp(later, tz_name) == local,
+                  later).otherwise(earlier)
+
+
 class DateTime(Op):
     """strptime + tz conversion (reference ``single_value.py:871-932``).
 
@@ -129,7 +144,7 @@ class DateTime(Op):
         ts = F.to_timestamp(col, java_fmt)
         in_name, out_name = _tz_name(input_tz), _tz_name(output_tz)
         if in_name != "UTC":
-            ts = F.to_utc_timestamp(ts, in_name)
+            ts = _localize_standard(ts, in_name)
         if return_date and return_time:
             local = F.from_utc_timestamp(ts, out_name)
             return F.struct(

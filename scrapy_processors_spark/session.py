@@ -3,7 +3,8 @@
 Scale posture (tuned for local[32] here, documented for a 1000-executor
 cluster): AQE on (runtime re-plan, skew-join splitting, partition coalescing),
 Arrow on for every pandas-kernel boundary, session timezone pinned to UTC so
-timestamp semantics are machine-independent.
+timestamp semantics are machine-independent, console progress bars off so
+stdout carries only what the caller prints.
 """
 
 from __future__ import annotations
@@ -37,12 +38,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     _warm_python_workers(spark)
-    _warm_query_plans(spark)
     return spark
 
 
@@ -52,12 +53,8 @@ def _warm_python_workers(spark: SparkSession) -> None:
     The first ArrowEvalPython stage of a session pays the worker daemon
     start + one fork per task slot + pandas/numpy import inside each
     worker (~2-3 s at 16 slots).  Workers are reused afterwards
-    (``spark.python.worker.reuse`` default), so paying that cost here —
-    one trivial pandas_udf task per slot at session construction — moves
-    it out of the first real query's latency.  No data or results are
-    touched.  Disable with ``SPARK_GRAFT_WARM_PYTHON=0``."""
-    if os.environ.get("SPARK_GRAFT_WARM_PYTHON", "1") == "0":
-        return
+    (``spark.python.worker.reuse`` default), so one trivial pandas_udf
+    task per slot here moves that cost out of the first real query."""
     if getattr(spark, "_graft_py_warmed", False):
         return
     spark._graft_py_warmed = True
@@ -95,194 +92,16 @@ def _warm_python_workers(spark: SparkSession) -> None:
               file=sys.stderr)
 
 
-_WARM_WORDS = (
-    "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu "
-    "nu xi omicron pi rho sigma tau upsilon phi chi psi omega").split()
-
-# rows per synthetic warm table: enough loop iterations to tier up the
-# generated per-row code (C2 OSR fires on hot loop backedges), small enough
-# that the candidate-pair joins of the dedup/ANN queries stay linear
-_WARM_SIZES = {"lineitem": 30000, "events": 30000, "orders": 20000,
-               "documents": 6000, "embeddings": 6000}
-
-
-def _warm_synth_col(f, idx):
-    """A synthetic column expression matching one schema field.  String
-    content mixes a URL, dictionary words keyed on the row id (so
-    shingle/minhash signatures DIFFER row to row — near-identical texts
-    would make the warm-up's dedup pair joins quadratic), a date phrase
-    and a price, exercising the parser kernels' hot paths."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    t = f.dataType
-    if isinstance(t, T.LongType):
-        return (F.col("id") * 7 + idx).alias(f.name)
-    if isinstance(t, T.IntegerType):
-        return ((F.col("id") % 1000) + idx).cast("int").alias(f.name)
-    if isinstance(t, (T.DoubleType, T.FloatType)):
-        return (F.col("id") * 1.37 + idx).cast(t).alias(f.name)
-    if isinstance(t, T.TimestampType):
-        return F.timestamp_seconds(
-            F.lit(1600000000) + F.col("id") % 100000).alias(f.name)
-    if isinstance(t, T.DateType):
-        return F.date_add(F.lit("2021-03-05").cast("date"),
-                          (F.col("id") % 365).cast("int")).alias(f.name)
-    if isinstance(t, T.ArrayType) and isinstance(
-            t.elementType, (T.DoubleType, T.FloatType,
-                            T.IntegerType, T.LongType)):
-        return F.transform(
-            F.sequence(F.lit(1), F.lit(64)),
-            lambda i: (i.cast("double") * 0.01).cast(t.elementType),
-        ).alias(f.name)
-    if isinstance(t, T.StringType):
-        words = []
-        for m in (3, 5, 7, 11, 13, 17):
-            words.append(F.element_at(
-                F.array(*[F.lit(w) for w in _WARM_WORDS]),
-                ((F.col("id") * m) % 23 + 1).cast("int")))
-            words.append(F.lit(" "))
-        return F.concat(
-            F.lit("https://h"), (F.col("id") % 97).cast("string"),
-            F.lit(".example.com/p/"), F.col("id").cast("string"),
-            F.lit(" "), *words,
-            F.lit("March 5, 2021 at 14:30:15 $1,234."),
-            (F.col("id") % 97).cast("string")).alias(f.name)
-    return F.lit(None).cast(t).alias(f.name)
-
-
-def _warm_query_plans(spark: SparkSession) -> None:
-    """Pre-execute the bench HEADLINE query plans on small SYNTHETIC tables
-    at session construction, so the timed single-shot runs hit compiled
-    code instead of paying first-execution costs.
-
-    What the first execution of each query otherwise pays inside its timed
-    region: janino compilation of its WholeStageCodegen classes, C2 JIT of
-    the generated per-row methods (the dominant term — measured 19.7 s
-    across the 23 HEADLINE queries at sf1-scale: 43.9 s first pass vs
-    24.2 s second pass in one session), plus first-use init of join/window
-    operator classes.  Executing the same plan shapes on schema-identical
-    synthetic inputs compiles and tiers the same generated classes
-    (codegen caches key on generated source, which embeds no file paths),
-    so the real queries reuse them.
-
-    Strictly NOT result caching: inputs are generated from spark.range in
-    a tempdir, nothing derived from the benchmark parquet is computed,
-    persisted, or keyed; every timed query still computes entirely from
-    its real inputs.  Same principle as ``_warm_python_workers`` and
-    bench.py's own untimed crawl warm-up, applied to query codegen.
-
-    Active only under the bench contract: requires ``SPARK_GRAFT_SF_DIR``
-    (exported by the bench driver; pytest/oracle runs don't set it), skips
-    bench.py's ``--crawl-run`` subprocesses (their session must stay
-    cheap; they have their own crawl-shaped warm-up), and is disabled by
-    ``SPARK_GRAFT_WARM_PLANS=0``."""
-    import sys
-
-    if os.environ.get("SPARK_GRAFT_WARM_PLANS", "1") == "0":
-        return
-    if "--crawl-run" in sys.argv:
-        return
-    # same fallback as bench.py:388 — the driver may rely on the default
-    # instead of exporting the env, and the warm-up must fire either way
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if not os.path.isdir(sf_dir):
-        return
-    # only bench-shaped sessions (bench.py's make_spark names them
-    # "bench-<cores>"): correctness/oracle harnesses must not pay ~1 min
-    # of warm-up per session even if they export SPARK_GRAFT_SF_DIR
-    if not spark.sparkContext.appName.startswith("bench"):
-        return
-    if getattr(spark, "_graft_plans_warmed", False):
-        return
-    spark._graft_plans_warmed = True
-    try:
-        import shutil
-        import tempfile
-
-        import __spark_entry__ as entrymod
-        from bench import HEADLINE
-
-        table_files = [f for f in sorted(os.listdir(sf_dir))
-                       if f.endswith(".parquet")]
-        if not table_files:
-            return
-        tmp = tempfile.mkdtemp(prefix="spark_graft_warmplans_")
-        try:
-            for fn in table_files:
-                name = fn[:-len(".parquet")]
-                schema = spark.read.parquet(f"{sf_dir}/{fn}").schema
-                n = _WARM_SIZES.get(name, 2000)
-                df = spark.range(n).select(
-                    *[_warm_synth_col(f, i)
-                      for i, f in enumerate(schema.fields)])
-                df.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/{fn}")
-            qs = entrymod.queries()
-            for qname in HEADLINE:
-                if qname not in qs:
-                    continue
-                try:
-                    (qs[qname](spark, tmp)
-                     .write.format("noop").mode("overwrite").save())
-                except Exception:  # noqa: BLE001 - warm-up is best-effort
-                    pass
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-    except Exception as e:  # best-effort: a failed warm-up must not break
-        print(f"warn: plan warm-up skipped: {type(e).__name__}: {e}",
-              file=sys.stderr)
-
-
-def fan_out(df: DataFrame, *keys: str) -> DataFrame:
-    """Scale-adaptive scan fan-out (optimization guide §2.2/§6).
-
-    A parquet scan cannot split below a row group, so a table that arrives
-    as one row group plans ONE scan task no matter how small
-    ``maxPartitionBytes`` is — and every downstream per-row map (regexp
-    codegen or Arrow kernel) runs serially on a many-slot session.  When
-    the scan plans fewer partitions than the session's parallelism,
-    repartition to the slot count: one small exchange of the input bytes
-    buys full-width execution of the (much more expensive) per-row work.
-    At warehouse scale inputs have orders of magnitude more row groups
-    than an executor has slots, the condition is false, and this is a
-    no-op — no shuffle is ever added to an already-parallel scan.
-
-    ``keys``: a unique/high-cardinality column set to HASH-partition on.
-    Strongly preferred over keyless round-robin, which first pays a local
-    sort of its input (``spark.sql.execution.sortBeforeRepartition``, on
-    by default since SPARK-23207 so retried tasks reproduce their row
-    assignment — measured ~2 s extra on a 1M-row table here); hash
-    partitioning is deterministic per row, needs no such sort, and a
-    unique key spreads uniformly.
-
-    Set ``SPARK_GRAFT_SCAN_FANOUT=0`` to disable (A/B knob).
-    """
-    if os.environ.get("SPARK_GRAFT_SCAN_FANOUT", "1") == "0":
-        return df
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        if keys:
-            return df.repartition(target, *keys)
-        return df.repartition(target)
-    return df
-
-
-# Primary-key columns of the testdata tables, for hash fan-out.
+# Primary-key columns of the tables read through read_table, for hash fan-out.
 TABLE_KEYS = {
     "documents": ("doc_id",),
     "events": ("event_id",),
     "embeddings": ("vec_id",),
     "lineitem": ("l_orderkey", "l_linenumber"),
-    "orders": ("o_orderkey",),
-    "customer": ("c_custkey",),
-    "supplier": ("s_suppkey",),
-    "part": ("p_partkey",),
-    "nation": ("n_nationkey",),
-    "region": ("r_regionkey",),
 }
 
 
-def _scan_width(path: str) -> "int | None":
+def _scan_width(path: str) -> int:
     """Effective max scan parallelism of a parquet path = its total ROW
     GROUP count (from the footers, driver-side, no job).  Spark's planned
     split count overstates this badly: split sizing uses
@@ -290,24 +109,28 @@ def _scan_width(path: str) -> "int | None":
     plans 16 splits of which only 6 yield rows (a row group goes to the
     split holding its midpoint) — measured here as a stage that "has 16
     partitions" but runs 6-wide with 10 empty tasks."""
-    try:
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        if os.path.isdir(path):
-            files = [os.path.join(path, f) for f in os.listdir(path)
-                     if f.endswith(".parquet")]
-        else:
-            files = [path]
-        if not files:
-            return None
-        return sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
-    except Exception:
-        return None
+    if os.path.isdir(path):
+        files = [os.path.join(path, f) for f in os.listdir(path)
+                 if f.endswith(".parquet")]
+    else:
+        files = [path]
+    return sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str,
                expensive: bool = True) -> DataFrame:
     """Parquet read + keyed scan fan-out (shared by the query modules).
+
+    A parquet scan cannot split below a row group, so a table with fewer
+    row groups than the session has slots runs every downstream per-row
+    map narrower than the session.  Such a scan is hash-repartitioned on
+    the table's key (``TABLE_KEYS``) to ``defaultParallelism``: a unique
+    key spreads uniformly and, unlike keyless round-robin, needs no local
+    sort first (``spark.sql.execution.sortBeforeRepartition``).  A scan
+    with at least as many row groups as slots is returned as is, so
+    warehouse-scale inputs never get the extra exchange.
 
     ``expensive``: whether the downstream per-row work is costly enough
     (Python kernels, many-regex pipelines) that one exchange of the input
@@ -316,18 +139,13 @@ def read_table(spark: SparkSession, sf_dir: str, name: str,
     costs more than the serial loss (measured: extract_digits 1.7 s at
     natural 6-way vs 3.3 s shuffled 16-way, while the kernel-bound
     price trio is 2.6-3.0 s shuffled vs 5.5-6.5 s at natural width).
-    This is a property of the operator (CPU per byte), not of the scale:
-    at warehouse scale ``width >= target`` and no exchange happens either
-    way."""
+
+    Set ``SPARK_GRAFT_SCAN_FANOUT=0`` to disable the fan-out (A/B knob)."""
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
     if os.environ.get("SPARK_GRAFT_SCAN_FANOUT", "1") == "0" or not expensive:
         return df
-    keys = TABLE_KEYS.get(name, ())
-    width = _scan_width(path)
-    if width is None:
-        return fan_out(df, *keys)
     target = spark.sparkContext.defaultParallelism
-    if width < target:
-        return df.repartition(target, *keys) if keys else df.repartition(target)
+    if _scan_width(path) < target:
+        return df.repartition(target, *TABLE_KEYS[name])
     return df

@@ -60,6 +60,22 @@ def test_datetime_spark_timezones(spark):
     assert run_scalar(spark, DateTime(input_tz="America/New_York",
                                       format="%B %d, %Y %H:%M:%S"),
                       ["January 1, 2022 07:00:00"]) == [expected]
+    # DST edges follow pytz.localize's is_dst=False: the repeated fall-back
+    # hour reads as standard time, the skipped spring-forward hour with the
+    # pre-transition offset; both tiers must agree
+    edges = [
+        ("America/New_York", "2015-11-01, 01:15:52", datetime(2015, 11, 1, 6, 15, 52)),
+        ("America/New_York", "2015-03-08, 02:30:00", datetime(2015, 3, 8, 7, 30, 0)),
+        ("America/New_York", "2015-11-01, 00:59:59", datetime(2015, 11, 1, 4, 59, 59)),
+        ("America/New_York", "2015-11-01, 02:00:00", datetime(2015, 11, 1, 7, 0, 0)),
+        ("Europe/Paris", "2015-10-25, 02:30:00", datetime(2015, 10, 25, 1, 30, 0)),
+        ("Europe/Paris", "2015-03-29, 02:30:00", datetime(2015, 3, 29, 1, 30, 0)),
+    ]
+    for tz, inp, exp in edges:
+        op = DateTime(input_tz=tz)
+        ref = op.process_value(inp).astimezone(UTC).replace(tzinfo=None)
+        assert ref == exp, (tz, inp)
+        assert run_scalar(spark, op, [inp]) == [exp], (tz, inp)
 
 
 # -------------------------------------------------------------------------- Date
