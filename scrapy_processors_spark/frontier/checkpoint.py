@@ -38,13 +38,23 @@ from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-SNAPSHOT_TABLES = ("frontier", "host_state")
+from scrapy_processors_spark.frontier.bloom import BLOOM_SCHEMA
+from scrapy_processors_spark.frontier.cuckoo import CUCKOO_SCHEMA
+from scrapy_processors_spark.session import parquet_footers
+
 DELTA_TABLES = ("seen", "fetch_log")
 
+# tables are read back with declared schemas: inferring one costs a job per read
+SNAPSHOT_SCHEMAS = {
+    "frontier": "url string, url_hash long, host string, bucket int, depth int, priority double",
+    "host_state": "host string, tokens double, tokens_per_round double, burst double, n_seen long",
+}
+FILTER_SCHEMAS = {"bloom": BLOOM_SCHEMA, "cuckoo": CUCKOO_SCHEMA}
 SEEN_SCHEMA = "url_hash long, url string, host string, bucket int"
 FETCH_LOG_SCHEMA = "round int, url string, url_hash long, host string, priority double"
 
@@ -73,18 +83,19 @@ def write_checkpoint(root: str, rnd: int, frontier: DataFrame,
     write_table(host_state, os.path.join(d, "host_state"))
     if bloom is not None:
         write_table(bloom, os.path.join(d, "bloom"))
-    # per-bucket lineage of the seen delta BEFORE writing (one small job; the
-    # counts double as the write's row-count audit)
-    seen_by_bucket = {
-        str(r["bucket"]): r["count"]
-        for r in seen_delta.groupBy("bucket").count().collect()
-    }
-    write_table(seen_delta, _delta_dir(root, "seen", rnd), partition_by=["bucket"])
+    seen_dir = _delta_dir(root, "seen", rnd)
+    write_table(seen_delta, seen_dir, partition_by=["bucket"])
     write_table(fetch_log_delta, _delta_dir(root, "fetch_log", rnd))
+    # per-bucket lineage of the seen delta from the written files' footers
+    # (driver-side, no job): the counts audit what actually landed on disk
+    seen_by_bucket = Counter()
+    for path, footer in parquet_footers(seen_dir):
+        bucket = os.path.basename(os.path.dirname(path)).split("=", 1)[1]
+        seen_by_bucket[bucket] += footer.num_rows
     manifest = {
         "round": rnd,
         "parent_round": _parent_round(root, rnd),
-        "snapshots": {t: os.path.join(d, t) for t in SNAPSHOT_TABLES},
+        "snapshots": {t: os.path.join(d, t) for t in SNAPSHOT_SCHEMAS},
         "bloom": os.path.join(d, "bloom") if bloom is not None else None,
         "deltas": {t: _delta_dir(root, t, rnd) for t in DELTA_TABLES},
         "lineage": {
@@ -135,19 +146,22 @@ def _read_delta_union(spark: SparkSession, root: str, table: str, rnd: int,
                 dirs.append(os.path.join(log_root, name))
     if not dirs:
         return spark.createDataFrame([], schema)
-    return spark.read.option("basePath", log_root).parquet(*dirs) \
+    return spark.read.schema(schema).option("basePath", log_root).parquet(*dirs) \
         .drop("ckpt").select(*[f.split(" ")[0] for f in schema.split(", ")])
 
 
-def read_checkpoint(spark: SparkSession, root: str, rnd: int) -> dict:
+def read_checkpoint(spark: SparkSession, root: str, rnd: int,
+                    filter_kind: str = "bloom") -> dict:
     d = _round_dir(root, rnd)
     with open(os.path.join(d, "manifest.json")) as f:
         manifest = json.load(f)
-    out = {t: spark.read.parquet(os.path.join(d, t)) for t in SNAPSHOT_TABLES}
+    out = {t: spark.read.schema(schema).parquet(os.path.join(d, t))
+           for t, schema in SNAPSHOT_SCHEMAS.items()}
     out["seen"] = _read_delta_union(spark, root, "seen", rnd, SEEN_SCHEMA)
     out["fetch_log"] = _read_delta_union(spark, root, "fetch_log", rnd,
                                          FETCH_LOG_SCHEMA)
     bloom_path = os.path.join(d, "bloom")
-    out["bloom"] = spark.read.parquet(bloom_path) if os.path.isdir(bloom_path) else None
+    out["bloom"] = (spark.read.schema(FILTER_SCHEMAS[filter_kind]).parquet(bloom_path)
+                    if os.path.isdir(bloom_path) else None)
     out["manifest"] = manifest
     return out

@@ -14,17 +14,19 @@ which is what makes unbounded-round iteration viable on Spark):
 3. **expand** — outlinks from the deterministic page function (or a real
    pages table), canonicalized, hashed (xxhash64 — 64-bit identity space for
    the 10^10-URL target), bucketed by murmur3 of the host.
-4. **URL-seen dedup** — per-bucket Bloom prefilter (``bloom.filter_unseen``,
-   on by default), then the exact ``left_anti`` join backstop against the
-   seen table for the maybe-seen residue, both co-partitioned by
-   host-bucket.  Segments are maintained INCREMENTALLY: built once from the
-   seeds, then OR-updated with each round's new hashes — never rebuilt from
-   the full seen table.
-5. **state update + checkpoint** — frontier/host_state/bloom written as an
-   Iceberg-style snapshot; seen/fetch_log as APPEND-ONLY per-checkpoint
-   deltas (O(new URLs) I/O per round) with per-bucket lineage counts in the
-   manifest; the next round reads back from the snapshot (resume-exactly ==
-   in-memory run).
+4. **URL-seen dedup** — one per-bucket Bloom probe (``bloom.filter_unseen``,
+   on by default) tags each candidate ``maybe_seen``; one exact
+   ``left_anti`` join against the seen table, matching only tagged rows,
+   is the backstop.  Segments are maintained INCREMENTALLY: built once from
+   the seeds, then OR-updated with each round's new hashes — never rebuilt
+   from the full seen table.
+5. **state update + checkpoint** — every ``checkpoint_every`` rounds,
+   frontier/host_state/bloom are written as an Iceberg-style snapshot and
+   seen/fetch_log as APPEND-ONLY deltas since the previous checkpoint
+   (O(new URLs) I/O) with per-bucket lineage counts and the round's
+   fetched/new counts in the manifest; the next round reads back from the
+   snapshot (resume-exactly == in-memory run).  Other rounds truncate
+   lineage with local checkpoints.
 
 Determinism: every ordering is total — (priority DESC, url_hash ASC) — and
 every value is a pure function of the data, never of task scheduling.  The
@@ -34,12 +36,11 @@ parallelism levels, and checkpoint resumes (tested).
 
 from __future__ import annotations
 
-import math
 import time
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from scrapy_processors_spark.frontier import bloom as bloom_mod
@@ -90,26 +91,13 @@ class CrawlConfig:
     metrics: list = field(default_factory=list)
 
 
-def _filter_build(seen_sel: DataFrame, cfg: CrawlConfig) -> DataFrame:
+def _filter(cfg: CrawlConfig):
+    """(module, size) of the configured URL-seen filter."""
     if cfg.filter_kind == "cuckoo":
-        return cuckoo_mod.build_segments(seen_sel, cfg.cuckoo_m_buckets)
+        return cuckoo_mod, cfg.cuckoo_m_buckets
     # None only reaches here on the resume-without-bloom rebuild path
     # (init_state resolves it); existing segments carry their own geometry
-    return bloom_mod.build_segments(seen_sel, cfg.bloom_m_bits or (1 << 20))
-
-
-def _filter_update(segments: DataFrame, new_rows: DataFrame,
-                   cfg: CrawlConfig) -> DataFrame:
-    if cfg.filter_kind == "cuckoo":
-        return cuckoo_mod.update_segments(segments, new_rows, cfg.cuckoo_m_buckets)
-    return bloom_mod.update_segments(segments, new_rows,
-                                     cfg.bloom_m_bits or (1 << 20))
-
-
-def _filter_probe(candidates: DataFrame, segments: DataFrame,
-                  cfg: CrawlConfig) -> DataFrame:
-    mod = cuckoo_mod if cfg.filter_kind == "cuckoo" else bloom_mod
-    return mod.filter_unseen(candidates, segments)
+    return bloom_mod, cfg.bloom_m_bits or (1 << 20)
 
 
 def _with_identity(df: DataFrame, url_col: str, cfg: CrawlConfig) -> DataFrame:
@@ -130,11 +118,15 @@ def _priority(depth, host_seen) -> F.Column:
 
 
 def init_state(spark: SparkSession, seeds: DataFrame, cfg: CrawlConfig) -> dict:
+    # materialized once: every later job reads the deduplicated seeds
+    # instead of re-running the dedup shuffle, and the count comes free
+    n_seeds = Observation()
     frontier = _with_identity(seeds, "url", cfg).select(
         "url", "url_hash", "host", "bucket",
         F.lit(0).alias("depth"),
         _priority(F.lit(0), F.lit(0)).alias("priority"),
-    ).dropDuplicates(["url_hash"])
+    ).dropDuplicates(["url_hash"]) \
+        .observe(n_seeds, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
     seen = frontier.select("url_hash", "url", "host", "bucket")
     politeness = graph.politeness_table(spark, cfg.n_hosts)
     host_state = politeness.select(
@@ -148,12 +140,11 @@ def init_state(spark: SparkSession, seeds: DataFrame, cfg: CrawlConfig) -> dict:
             # expected distinct URLs ~ seeds * (1 + out-degree): each BFS
             # wave discovers <= max_degree links per fetched page and dedup
             # collapses the rest; the 2^24 ceiling bounds deep crawls
-            n_seeds = seen.count()  # seeds are already localCheckpoint-cheap
             cfg.bloom_m_bits = bloom_mod.auto_m_bits(
-                n_seeds * (1 + cfg.max_degree), cfg.n_buckets)
-        bloom = _filter_build(
-            seen.select("bucket", "url_hash"), cfg
-        ).localCheckpoint(eager=True)
+                n_seeds.get["n"] * (1 + cfg.max_degree), cfg.n_buckets)
+        mod, size = _filter(cfg)
+        bloom = mod.build_segments(seen.select("bucket", "url_hash"), size) \
+            .localCheckpoint(eager=True)
     return {"frontier": frontier, "seen": seen, "host_state": host_state,
             "fetch_log": fetch_log, "bloom": bloom,
             # deltas since the last durable checkpoint (the initial seen set
@@ -214,14 +205,14 @@ def crawl_round(spark: SparkSession, state: dict, robots: DataFrame,
     # 1. robots filter over the whole frontier (broadcast, zero shuffle),
     # 2. politeness-budgeted ranking; rank<=k fetches, the rest carries over
     #    (a filter split — replaces two anti-joins of the previous design).
-    # The ranked frame feeds batch, carryover, fetched AND the link expansion
-    # — materialize it ONCE (downstream state frames would otherwise each
-    # re-execute the ranking shuffles; measured 3-4x round cost).
     # Materialize ONCE: batch, carryover, fetched and the link expansion all
     # read `ranked`; in checkpoint rounds the durable writes of frontier/
     # seen_delta/fetch_delta would otherwise each re-execute the ranking
-    # shuffles (measured 3-4x round cost).
+    # shuffles (measured 3-4x round cost).  The fetched count is observed
+    # on that same job.
+    n_fetched = Observation()
     ranked = _rank_frontier(_robots_allowed(frontier, robots, cfg), host_state, cfg) \
+        .observe(n_fetched, F.count(F.when(F.col("rank") <= F.col("k"), 1)).alias("n")) \
         .localCheckpoint(eager=True)
     if cfg.selection_snapshot_path:
         # salt-pruned rows (rank null) are included: they can never be in
@@ -253,14 +244,16 @@ def crawl_round(spark: SparkSession, state: dict, robots: DataFrame,
     # 4. URL-seen dedup: incremental bloom fast path + exact anti-join
     #    backstop.  Segments are CARRIED in the state (built once from the
     #    seeds, OR-updated with each round's new hashes below) — never
-    #    rebuilt from the full seen table.
+    #    rebuilt from the full seen table.  The probe runs once: seen joins
+    #    on (url_hash, maybe_seen=true), so definitely-new rows never match
+    #    and pass the one anti-join.  Trade-off: they still travel through
+    #    its exchange, where splitting off the maybe-seen residue would keep
+    #    them out at the price of a second probe.
     if cfg.use_bloom and state.get("bloom") is not None:
-        tagged = _filter_probe(links, state["bloom"], cfg)
-        definitely_new = tagged.where(~F.col("maybe_seen")).drop("maybe_seen")
-        residue = tagged.where(F.col("maybe_seen")).drop("maybe_seen")
-        new_urls = definitely_new.unionByName(
-            residue.join(seen.select("url_hash"), on="url_hash", how="left_anti")
-        )
+        new_urls = _filter(cfg)[0].filter_unseen(links, state["bloom"]).join(
+            seen.select("url_hash", F.lit(True).alias("maybe_seen")),
+            on=["url_hash", "maybe_seen"], how="left_anti",
+        ).drop("maybe_seen")
     else:
         new_urls = links.join(seen.select("url_hash"), on="url_hash", how="left_anti")
 
@@ -277,7 +270,9 @@ def crawl_round(spark: SparkSession, state: dict, robots: DataFrame,
     )
     # shared by frontier_next, seen_next, the host_state aggregates, the
     # bloom update, and (in checkpoint rounds) the delta writes + counts
-    new_frontier_rows = new_frontier_rows.localCheckpoint(eager=True)
+    n_new = Observation()
+    new_frontier_rows = new_frontier_rows \
+        .observe(n_new, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
 
     # 5. state update (carryover already excludes fetched + robots-blocked)
     frontier_next = carryover.unionByName(new_frontier_rows)
@@ -305,13 +300,12 @@ def crawl_round(spark: SparkSession, state: dict, robots: DataFrame,
     fetch_delta_next = state["fetch_log_delta"].unionByName(fetched)
 
     # incremental bloom maintenance: OR in only this round's new hashes
-    # (O(new URLs)); segments are tiny (n_buckets bitmaps), so an eager
-    # localCheckpoint each round keeps their lineage flat
+    # (O(new URLs)); segments are tiny (n_buckets bitmaps) and are
+    # truncated with the other state below
     bloom_next = state.get("bloom")
     if cfg.use_bloom and bloom_next is not None:
-        bloom_next = _filter_update(
-            bloom_next, new_seen_rows, cfg
-        ).localCheckpoint(eager=True)
+        mod, size = _filter(cfg)
+        bloom_next = mod.update_segments(bloom_next, new_seen_rows, size)
 
     new_state = {"frontier": frontier_next, "seen": seen_next,
                  "host_state": host_state_next, "fetch_log": fetch_log_next,
@@ -322,24 +316,22 @@ def crawl_round(spark: SparkSession, state: dict, robots: DataFrame,
     # appended to the seen/fetch logs (O(new URLs) I/O), snapshots only for
     # the O(active)/O(hosts)/O(buckets) tables
     if cfg.checkpoint_root and rnd % cfg.checkpoint_every == 0:
-        n_fetched = fetched.count()
-        n_new = new_frontier_rows.count()
-        metrics = {
-            "fetched": n_fetched,
-            "new_urls": n_new,
-            "wall_s": round(time.time() - t0, 3),
-        }
+        metrics = {"fetched": n_fetched.get["n"], "new_urls": n_new.get["n"],
+                   "wall_s": round(time.time() - t0, 3)}
         cfg.metrics.append({"round": rnd, **metrics})
         ckpt.write_checkpoint(cfg.checkpoint_root, rnd, frontier_next,
                               host_state_next, seen_delta_next,
                               fetch_delta_next, metrics, bloom=bloom_next)
-        loaded = ckpt.read_checkpoint(spark, cfg.checkpoint_root, rnd)
+        loaded = ckpt.read_checkpoint(spark, cfg.checkpoint_root, rnd, cfg.filter_kind)
         new_state = _state_from_checkpoint(spark, loaded, rnd)
     else:
         # frontier/seen/fetch_log are now cheap filters/unions over the two
         # eagerly-checkpointed frames (ranked, new_frontier_rows); only
-        # host_state carries a join chain worth truncating each round
-        new_state["host_state"] = new_state["host_state"].localCheckpoint(eager=True)
+        # host_state and the filter segments carry a join chain worth
+        # truncating each round (durable rounds read both back instead)
+        for key in ("host_state", "bloom"):
+            if new_state[key] is not None:
+                new_state[key] = new_state[key].localCheckpoint(eager=True)
         if rnd % 10 == 0:
             # compact the growing union-of-checkpointed-legs plans
             for key in ("frontier", "seen", "fetch_log", "seen_delta",
@@ -366,31 +358,23 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig,
               robots: Optional[DataFrame] = None,
               resume: bool = False) -> dict:
     robots = robots if robots is not None else graph.robots_table(spark, cfg.n_hosts)
-    if resume and cfg.checkpoint_root:
-        last = ckpt.latest_round(cfg.checkpoint_root)
-        if last is not None:
-            loaded = ckpt.read_checkpoint(spark, cfg.checkpoint_root, last)
-            state = _state_from_checkpoint(spark, loaded, last)
-            if cfg.use_bloom and cfg.bloom_m_bits is None:
-                # resume skips init_state, so resolve the auto geometry here
-                # from the restored seen set (ADVICE r04: otherwise the
-                # rebuild below and any post-resume bucket fell back to the
-                # fixed 1<<20 floor, re-introducing under-sizing; correctness
-                # was never at stake — the exact anti-join backstops — but
-                # FPR/perf was)
-                cfg.bloom_m_bits = bloom_mod.auto_m_bits(
-                    state["seen"].count() * (1 + cfg.max_degree), cfg.n_buckets)
-            if cfg.use_bloom and state["bloom"] is None:
-                # older/filter-less checkpoint: one-time rebuild from seen
-                state["bloom"] = _filter_build(
-                    state["seen"].select("bucket", "url_hash"), cfg
-                ).localCheckpoint(eager=True)
-        else:
-            state = init_state(spark, seeds if seeds is not None
-                               else graph.seed_urls(spark, 100, cfg.n_hosts), cfg)
-    else:
+    last = ckpt.latest_round(cfg.checkpoint_root) if resume and cfg.checkpoint_root else None
+    if last is None:
         state = init_state(spark, seeds if seeds is not None
                            else graph.seed_urls(spark, 100, cfg.n_hosts), cfg)
+    else:
+        loaded = ckpt.read_checkpoint(spark, cfg.checkpoint_root, last, cfg.filter_kind)
+        state = _state_from_checkpoint(spark, loaded, last)
+        if cfg.use_bloom and cfg.bloom_m_bits is None:
+            # resume skips init_state: size the auto geometry from the
+            # restored seen set, not the fixed 1<<20 floor (FPR, not results)
+            cfg.bloom_m_bits = bloom_mod.auto_m_bits(
+                state["seen"].count() * (1 + cfg.max_degree), cfg.n_buckets)
+        if cfg.use_bloom and state["bloom"] is None:
+            # older/filter-less checkpoint: one-time rebuild from seen
+            mod, size = _filter(cfg)
+            state["bloom"] = mod.build_segments(
+                state["seen"].select("bucket", "url_hash"), size).localCheckpoint(eager=True)
     while state["round"] < cfg.max_rounds:
         state = crawl_round(spark, state, robots, cfg)
     return state

@@ -1,6 +1,8 @@
 """Frontier layer: canonicalization rules, Bloom segments, crawl determinism,
 checkpoint-resume equality (north_rule acceptance behaviours at test scale)."""
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -148,41 +150,107 @@ def test_bloom_incremental_update_equals_rebuild(spark):
 
 
 def test_checkpoint_is_incremental_and_carries_lineage(spark, tmp_path):
-    """seen/fetch_log checkpoints are per-round deltas (bytes ~ O(new URLs),
-    not O(total seen)); the manifest carries per-bucket lineage counts and
-    the persisted Bloom segments round-trip."""
+    """seen/fetch_log checkpoints are deltas since the previous checkpoint
+    (bytes ~ O(new URLs), not O(total seen)); the manifest's per-bucket
+    lineage and fetched/new_urls metrics equal counts taken independently
+    of the crawl's own bookkeeping; the persisted Bloom segments
+    round-trip.  Checkpointing every round and every second round."""
+    from scrapy_processors_spark.frontier.crawler import crawl_round, init_state
+
+    rounds = 4
+    # reference: the same crawl in memory, stepped round by round
+    ref_cfg = CrawlConfig(**{**CFG, "max_rounds": rounds})
+    ref = init_state(spark, graph.seed_urls(spark, 100, CFG["n_hosts"]), ref_cfg)
+    seen_after = [ref["seen"].count()]
+    robots = graph.robots_table(spark, CFG["n_hosts"])
+    for _ in range(rounds):
+        ref = crawl_round(spark, ref, robots, ref_cfg)
+        seen_after.append(ref["seen"].count())
+    new_by_round = {r: seen_after[r] - seen_after[r - 1] for r in range(1, rounds + 1)}
+    for every in (1, 2):
+        _check_lineage(spark, str(tmp_path / f"every{every}"), every, rounds,
+                       seen_after, new_by_round)
+
+
+def _check_lineage(spark, root, every, rounds, seen_after, new_by_round):
     import json
     import os
 
     from scrapy_processors_spark.frontier import checkpoint as ckpt
 
-    root = str(tmp_path / "ckpt")
-    cfg = CrawlConfig(**{**CFG, "max_rounds": 3}, checkpoint_root=root)
+    cfg = CrawlConfig(**{**CFG, "max_rounds": rounds}, checkpoint_root=root,
+                      checkpoint_every=every)
     state = run_crawl(spark, cfg)
+    durable = [r for r in range(1, rounds + 1) if r % every == 0]
+    fetched_by_round = {r["round"]: r["count"]
+                        for r in state["fetch_log"].groupBy("round").count().collect()}
 
-    # each checkpoint's seen delta covers only that round's new URLs; the
-    # deltas partition the full seen set (disjoint + complete)
+    # each checkpoint's seen delta covers only the URLs first seen since the
+    # previous one (the seeds ride in the first); the deltas partition the
+    # full seen set (disjoint + complete)
     total_seen = state["seen"].count()
-    delta_counts = {}
-    for rnd in (1, 2, 3):
+    delta_counts, prev = {}, 0
+    for rnd in durable:
         d = spark.read.parquet(os.path.join(root, "seen_log", f"ckpt={rnd:04d}"))
         delta_counts[rnd] = d.count()
+        assert delta_counts[rnd] == (seen_after[0] if prev == 0 else 0) + sum(
+            new_by_round[q] for q in range(prev + 1, rnd + 1))
         with open(os.path.join(root, f"round={rnd:04d}", "manifest.json")) as f:
             manifest = json.load(f)
         lin = manifest["lineage"]
         assert lin["seen_delta_rows"] == delta_counts[rnd]
-        assert sum(lin["seen_delta_rows_by_bucket"].values()) == delta_counts[rnd]
-        assert manifest["metrics"]["fetched"] >= 0
-    assert sum(delta_counts.values()) == total_seen
-    assert delta_counts[2] < total_seen  # genuinely incremental
-    assert manifest["parent_round"] == 2
+        assert lin["seen_delta_rows_by_bucket"] == {
+            str(r["bucket"]): r["count"] for r in d.groupBy("bucket").count().collect()}
+        assert manifest["metrics"]["fetched"] == fetched_by_round.get(rnd, 0)
+        assert manifest["metrics"]["new_urls"] == new_by_round[rnd]
+        assert manifest["parent_round"] == (prev or None)
+        prev = rnd
+    assert [m["round"] for m in cfg.metrics] == durable
+    assert sum(delta_counts.values()) == total_seen == seen_after[-1]
+    assert max(delta_counts.values()) < total_seen  # genuinely incremental
 
     # bloom segments persisted + restored
-    loaded = ckpt.read_checkpoint(spark, root, 3)
+    loaded = ckpt.read_checkpoint(spark, root, rounds)
     assert loaded["bloom"] is not None
     restored = {r["bucket"]: bytes(r["bitmap"]) for r in loaded["bloom"].collect()}
     live = {r["bucket"]: bytes(r["bitmap"]) for r in state["bloom"].collect()}
     assert restored == live
+
+
+def test_warm_crawl_compiles_nothing_and_probes_once_per_round(spark, tmp_path):
+    """Driver cost of a warm crawl: an identical second crawl finds every
+    generated class in the codegen cache (0 janino compiles), and its
+    executed plans hold one Bloom probe per round."""
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def crawl(name):
+        run_crawl(spark, CrawlConfig(**{**CFG, "max_rounds": 2}, checkpoint_every=2,
+                                     checkpoint_root=str(tmp_path / name)))
+        bus.waitUntilEmpty()
+
+    def executions():
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    crawl("warm-up")
+    before = compiles.getCount()
+    last = max(e.executionId() for e in executions())
+    crawl("measured")
+    assert compiles.getCount() - before == 0
+    probes = 0
+    for e in executions():
+        if e.executionId() > last:
+            tree, details = e.physicalPlanDescription().split("\n\n", 1)
+            # cogroup nodes of the final plan (not AQE's initial plan) whose
+            # detail block names the probe function
+            for node in re.findall(r"FlatMapCoGroupsInPandas \((\d+)\)",
+                                   tree.split("== Initial Plan ==", 1)[0]):
+                block = ("\n" + details).split(f"\n({node}) FlatMapCoGroupsInPandas\n", 1)[1]
+                probes += "probe(" in block.split("\n\n", 1)[0]
+    assert probes == 2
 
 
 def test_bloom_no_false_negatives(spark):

@@ -4,7 +4,7 @@ fewer row groups than the session has slots."""
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from scrapy_processors_spark.session import read_table
+from scrapy_processors_spark.session import _scan_width, read_table
 
 
 def _plan(df) -> str:
@@ -35,3 +35,12 @@ def test_read_table_fans_out_narrow_scans_only(spark, tmp_path, monkeypatch):
     df = read_table(spark, str(wide), "documents")
     assert "Exchange" not in _plan(df)
     assert df.count() == n
+
+
+def test_scan_width_walks_hive_partitions(tmp_path):
+    """A hive-partitioned table keeps its files in ``k=v/`` subdirectories;
+    every row group under them counts."""
+    table = pa.table({"k": [i % 4 for i in range(64)], "v": list(range(64))})
+    pq.write_to_dataset(table, tmp_path / "documents.parquet",
+                        partition_cols=["k"], row_group_size=4)
+    assert _scan_width(str(tmp_path / "documents.parquet")) == 16
