@@ -16,14 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str,
-       expensive: bool = True) -> DataFrame:
-    from scrapy_processors_spark.session import read_table
-
-    # Keyed scan fan-out when the file has fewer row groups than slots;
-    # ``expensive=False`` keeps cheap codegen queries at natural width.
-    return read_table(spark, sf_dir, name, expensive=expensive)
+from scrapy_processors_spark.session import read_table
 
 
 # ---------------------------------------------------------------------------
@@ -35,7 +28,7 @@ def q_clean_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference __init__.py:42-48) over a noisified documents.text."""
     from scrapy_processors_spark import clean_string
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     noisy = F.concat(F.lit('  "'), F.col("text"), F.lit('   !!  '))
     return docs.select(
         "doc_id", clean_string.apply_scalar(noisy).alias("cleaned")
@@ -45,7 +38,7 @@ def q_clean_string(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_normalize_whitespace(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import NormalizeWhitespace
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     noisy = F.concat(F.lit("  "), F.regexp_replace("text", " ", "   "), F.lit(" !"))
     return docs.select(
         "doc_id", NormalizeWhitespace()(noisy).alias("normalized")
@@ -55,7 +48,7 @@ def q_normalize_whitespace(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_strip_quotes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import StripQuotes
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     # boundary quote-runs to strip AND interior quotes that must survive:
     # the oracle re-implements the strip as an RE2 regexp over the same
     # noisy input, so it discriminates (VERDICT r02 #10), unlike the
@@ -67,7 +60,7 @@ def q_strip_quotes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_char_padding(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import CharWhitespacePadding
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     plussed = F.regexp_replace("text", " ", "+")
     op = CharWhitespacePadding(chars=("+",), lpad=1, rpad=1)
     return docs.select("doc_id", op(plussed).alias("padded"))
@@ -76,7 +69,7 @@ def q_char_padding(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_unicode_escape(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import UnicodeEscape
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     escaped = F.concat(F.lit("a\\tb "), F.col("text"))
     return docs.select("doc_id", UnicodeEscape()(escaped).alias("unescaped"))
 
@@ -84,7 +77,7 @@ def q_unicode_escape(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_remove_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import RemoveHTMLTags
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     # entities + a decoy entity-looking tail: the oracle must model entity
     # decoding and tag removal, not just echo text (VERDICT r02 #10)
     html = F.concat(F.lit("<p>A &amp; B "), F.col("text"),
@@ -95,7 +88,7 @@ def q_remove_html(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_demojize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import Demojize
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     emojified = F.concat(F.col("text"), F.lit(" \U0001F44D"))
     return docs.select("doc_id", Demojize()(emojified).alias("demojized"))
 
@@ -103,7 +96,7 @@ def q_demojize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_remove_emojis(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import RemoveEmojis
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     emojified = F.concat(F.col("text"), F.lit(" \U0001F60A\U0001F44D"))
     return docs.select("doc_id", RemoveEmojis()(emojified).alias("no_emoji"))
 
@@ -111,7 +104,7 @@ def q_remove_emojis(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_extract_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import ExtractDigits
 
-    li = _t(spark, sf_dir, "lineitem", expensive=False)  # one codegen regex pass
+    li = read_table(spark, sf_dir, "lineitem", expensive=False)  # one codegen regex pass
     s = F.concat(
         F.lit("price "), F.col("l_extendedprice").cast("decimal(18,2)").cast("string"),
         F.lit(" qty "), F.col("l_quantity").cast("decimal(18,2)").cast("string"),
@@ -125,7 +118,7 @@ def q_extract_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_normalize_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import NormalizeNumericString
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     s = F.col("l_extendedprice").cast("decimal(18,2)").cast("string")
     op = NormalizeNumericString(
         thousands_separator=",", decimal_separator=".",
@@ -137,7 +130,7 @@ def q_normalize_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_price_parser(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import PriceParser
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     s = F.concat(F.lit("$"), F.col("l_extendedprice").cast("decimal(18,2)").cast("string"))
     price = PriceParser()(s)
     return li.select(
@@ -151,7 +144,7 @@ def q_price_parser(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_to_float(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import ToFloat
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     s = F.format_number(F.col("l_extendedprice"), 2)  # '44,473.56'
     amount = ToFloat()(s)
     return li.select(
@@ -163,7 +156,7 @@ def q_to_float(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import DateTime
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     s = F.date_format("ts", "yyyy-MM-dd, HH:mm:ss")
     op = DateTime(input_tz="America/New_York")
     return ev.select(
@@ -174,7 +167,7 @@ def q_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import Date
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     s = F.date_format("ts", "yyyy-MM-dd")
     return ev.select("event_id", Date()(s).alias("d"))
 
@@ -182,7 +175,7 @@ def q_date(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import Time
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     s = F.date_format("ts", "hh:mm:ss a")
     op = Time(format="%I:%M:%S %p")
     return ev.select("event_id", op(s).alias("t"))
@@ -208,7 +201,7 @@ def q_datetime_extraordinaire(spark: SparkSession, sf_dir: str) -> DataFrame:
     America/New_York, and emitted as a UTC timestamp string."""
     from scrapy_processors_spark import DateTimeExtraordinaire
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     idx = F.pmod(F.col("event_id"), F.lit(4))
     mon = F.month("ts")
     name_for = {
@@ -240,7 +233,7 @@ def q_datetime_extraordinaire(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_emails(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import Emails
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     s = F.concat(
         F.lit("contact "), F.col("source"), F.lit("@example.com or "),
         F.col("source"), F.lit("@other.com"),
@@ -252,7 +245,7 @@ def q_emails(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_phone_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import PhoneNumbers
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     suffix = F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0")
     s = F.concat(F.lit("call (816) 360-"), suffix, F.lit(" now"))
     arr = PhoneNumbers()(s)
@@ -262,7 +255,7 @@ def q_phone_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_socials(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import Socials
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     html = F.concat(
         F.lit('<a href="https://www.facebook.com/u'), F.col("doc_id").cast("string"),
         F.lit('">x</a><a href="https://example.com/i">y</a>'),
@@ -276,14 +269,14 @@ def q_socials(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_json_get(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import JsonGet
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return ev.select("event_id", JsonGet("k")(F.col("props")).alias("k_val"))
 
 
 def q_get_attr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import GetAttr
 
-    ev = _t(spark, sf_dir, "events", expensive=False)  # trivial struct pick
+    ev = read_table(spark, sf_dir, "events", expensive=False)  # trivial struct pick
     st = F.struct(F.col("event_type").alias("etype"), F.col("user_id").alias("uid"))
     return ev.select("event_id", GetAttr("etype")(st).alias("etype"))
 
@@ -291,7 +284,7 @@ def q_get_attr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_call_method(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import CallMethod
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.select("doc_id", CallMethod("upper")(F.col("source")).alias("src_upper"))
 
 
@@ -300,7 +293,7 @@ def q_map_compose_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     integration TextItemLoader, item_loaders.py:37-39)."""
     from scrapy_processors_spark import clean_string
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     pipeline = clean_string + str.capitalize
     noisy = F.concat(F.lit('  "'), F.col("text"), F.lit('"  '))
     return docs.select("doc_id", pipeline.apply_scalar(noisy).alias("capitalized"))
@@ -315,7 +308,7 @@ def q_compose(spark: SparkSession, sf_dir: str) -> DataFrame:
     with run_python and the absence of ArrowEvalPython)."""
     from scrapy_processors_spark import Compose, TakeFirst
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     words = F.split("text", " ")
     comp = Compose(reversed, TakeFirst(exclude=()), len)
     return docs.select(
@@ -332,7 +325,7 @@ def q_take_first_truthy(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered queries; see q_take_all_truthy)."""
     from scrapy_processors_spark import TakeFirst, TakeFirstTruthy
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     arr = F.array(
         F.lit(""),
         F.when(F.col("value") > 100, F.col("event_type")),
@@ -361,7 +354,7 @@ def q_take_all_truthy(spark: SparkSession, sf_dir: str) -> DataFrame:
     recorded exactly the first 50 registered queries)."""
     from scrapy_processors_spark import Join, TakeAll, TakeAllTruthy
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     gappy = F.split(F.regexp_replace("text", " ", "  "), " ")  # words + '' gaps
     kept = TakeAllTruthy()(gappy)
     return docs.select(
@@ -372,7 +365,7 @@ def q_take_all_truthy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import Coalesce
 
-    ev = _t(spark, sf_dir, "events", expensive=False)  # trivial CASE WHEN
+    ev = read_table(spark, sf_dir, "events", expensive=False)  # trivial CASE WHEN
     arr = F.array(
         F.when(F.col("value") > 100, F.col("event_type")),
         F.lit("fallback"),
@@ -383,7 +376,7 @@ def q_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scrapy_processors_spark import Flatten, Join
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     nested = F.array(F.split("text", " "), F.array(F.col("lang")))
     return docs.select("doc_id", Join(" ")(Flatten()(nested)).alias("flat"))
 

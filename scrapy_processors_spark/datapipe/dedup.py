@@ -1,18 +1,21 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-All variants are pure Column-expression / DataFrame compositions — no Python
-in the hot path — so they scale with Catalyst/AQE:
+Column-expression / DataFrame compositions, plus Arrow-batched kernels
+where an expression fold would run interpreted per element:
 
 - exact:      hash-groupBy on md5(text); map-side partial aggregation.
-- MinHash LSH: shingle -> k minhashes -> banded bucket keys -> per-band
-  equi-join (shuffle on band key) -> distinct pairs.  The classic
-  shingle/minhash/band/bucket-join decomposition; the join is AQE
-  skew-splittable when duplicate clusters are large.
-- SimHash:    16-bit fingerprint folded per-document with ``F.aggregate`` —
-  zero shuffle, zero UDF; near-dup candidates share a fingerprint.
+- MinHash LSH: shingle -> lanes minhashes (one Arrow kernel) -> one
+  ``(id, band, band_key)`` row per band -> a single equi-join on
+  ``(band, band_key)`` -> distinct pairs.  The classic
+  shingle/minhash/band/bucket-join decomposition, in the shape of Spark
+  ML's ``MinHashLSH.approxSimilarityJoin``.
+- SimHash:    16-bit fingerprint folded per-document with ``F.aggregate``
+  (spec) or ``simhash16_kernel`` (Arrow); near-dup candidates share a
+  fingerprint.
 - n-gram Jaccard: exact verify step over candidate pairs
   (``array_intersect``/``array_union`` on distinct shingle sets).
-- embedding cosine: dot/norm folds over ``array<float>`` columns.
+- embedding cosine: dot/norm folds over ``array<float>`` columns, and
+  their Arrow kernels.
 
 Determinism: every hash is md5-derived (same bytes on any engine/executor);
 no RNG anywhere.
@@ -21,7 +24,6 @@ no RNG anywhere.
 from __future__ import annotations
 
 import hashlib
-import os
 from typing import List
 
 import pandas as pd
@@ -65,49 +67,30 @@ def word_shingles(text: Column, n: int = 2) -> Column:
     return shingles
 
 
-def minhash_column(shingles: Column, seed: int) -> Column:
-    """Min over md5(shingle#seed) 8-hex prefixes — lexicographic min on hex ==
-    numeric min on the first 32 hash bits."""
-    return F.array_min(
-        F.transform(shingles, lambda s: F.substring(F.md5(F.concat(s, F.lit(f"#{seed}"))), 1, 8))
-    )
-
-
 def minhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", num_hashes: int = 4,
-                       shingle_n: int = 2, impl: str = "auto") -> DataFrame:
-    """``impl``: 'expr' = Column folds (codegen-free runtime but the plan
-    tree grows ~linearly with num_hashes and its driver-side analysis is a
-    serial floor, BENCH.md §4); 'kernel' = one Arrow UDF (ms compile, one
-    batch pass); 'auto' = kernel at >= 8 permutations.  Both produce
-    identical bytes (tests enforce).
-
-    'lanes' (r05, the scale path) switches hash FAMILY: hash j is the
-    8-hex span [8*(j%4), 8*(j%4)+8) of md5(shingle [|| '#'+group]) —
-    ceil(num_hashes/4) md5 calls per shingle instead of num_hashes, via
-    the adaptive Arrow kernel (``minhash_lanes_kernel``: batch-level
-    distinct-shingle hashing when the batch is dup-heavy).  Equally valid
-    minhashes, but signatures are NOT comparable across families — pick
-    one per signature table."""
-    if impl == "auto":
-        impl = "kernel" if num_hashes >= 8 else "expr"
-    if impl in ("kernel", "lanes"):
-        k = (minhash_lanes_kernel(num_hashes, shingle_n) if impl == "lanes"
-             else minhash_kernel(num_hashes, shingle_n))
-        sig = df.select(F.col(id_col).alias("id"),
-                        k(F.col(text_col)).alias("_mh"))
-        return sig.select(
-            "id", *[F.col("_mh")[j].alias(f"mh_{j}") for j in range(num_hashes)])
-    sh = word_shingles(F.col(text_col), shingle_n)
-    cols = [minhash_column(sh, j).alias(f"mh_{j}") for j in range(num_hashes)]
-    return df.select(F.col(id_col).alias("id"), *cols)
+                       shingle_n: int = 2) -> DataFrame:
+    """``(id, mh_0 .. mh_{num_hashes-1})`` in the lanes family: hash j is
+    the 8-hex span [8*(j%4), 8*(j%4)+8) of md5(shingle [|| '#'+group]),
+    computed by the adaptive Arrow kernel ``minhash_lanes_kernel``
+    (``ceil(num_hashes/4)`` md5 calls per shingle; batch-level
+    distinct-shingle hashing when the batch is dup-heavy)."""
+    k = minhash_lanes_kernel(num_hashes, shingle_n)
+    sig = df.select(F.col(id_col).alias("id"), k(F.col(text_col)).alias("_mh"))
+    return sig.select(
+        "id", *[F.col("_mh")[j].alias(f"mh_{j}") for j in range(num_hashes)])
 
 
-# minhash_pairs persists its signatures table (scanned 2*bands times per
-# call); the handle is kept here so the NEXT call — or an explicit
-# release_minhash_cache() — unpersists it.  Cache growth is therefore
-# bounded at one signatures table per session regardless of call count
-# (VERDICT r04 #10: the old bare persist leaked one table per call).
+# minhash_pairs persists its signatures table, which the band join reads on
+# both sides.  Without the persist the broadcast join runs the lanes kernel
+# once per side (2 ArrowEvalPython in the dedup_minhash plan, where
+# scripts/explain_plans.py demands exactly one).  Grouping ids per bucket
+# instead of a self-join keeps one kernel but shuffles every band row
+# (perfbench dedup shuffle_mb_per_kitem 0.073 -> 0.142, past its 0.10
+# bound).  The handle is kept here so the NEXT call — or an explicit
+# release_minhash_cache() — unpersists it: at most one signatures table is
+# cached per session regardless of call count (VERDICT r04 #10: the old
+# bare persist leaked one table per call).
 _minhash_sigs_cache: List[DataFrame] = []
 
 
@@ -121,39 +104,34 @@ def release_minhash_cache() -> None:
 
 def minhash_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                   num_hashes: int = 4, bands: int = 2,
-                  shingle_n: int = 2, impl: str = "auto") -> DataFrame:
-    """Candidate near-dup pairs: union over bands of equi-joins on the band
-    key (concatenated minhashes), de-duplicated.  ``impl`` selects the
-    signature implementation/family (see ``minhash_signatures``); candidate
-    sets differ across families only as any two independent minhash draws
-    do.
+                  shingle_n: int = 2, impl: str = "lanes") -> DataFrame:
+    """Candidate near-dup pairs ``(id_a, id_b)``, ``id_a < id_b``: docs that
+    share any band key (the concatenated minhashes of one band).  Each
+    signature row becomes ``bands`` rows of ``(id, band, band_key)``, joined
+    once on ``(band, band_key)`` and de-duplicated.  ``impl`` accepts only
+    ``"lanes"``, the one signature family.
 
     Caller contract: the signatures table is persisted lazily and stays
     cached until the next ``minhash_pairs`` call or an explicit
     ``release_minhash_cache()`` — unpersisting eagerly here would make the
-    2*bands self-join scans recompute the md5 folds (at warehouse scale
-    this is a persisted signatures table)."""
+    join's two sides recompute the kernel."""
+    if impl != "lanes":
+        raise ValueError(f"minhash_pairs: unknown impl {impl!r}; only 'lanes'")
     release_minhash_cache()
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n,
-                              impl=impl)
-    sigs = sigs.persist()
+    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n).persist()
     _minhash_sigs_cache.append(sigs)
     rows_per_band = num_hashes // bands
-    pair_dfs: List[DataFrame] = []
-    for b in range(bands):
-        key = F.concat_ws("", *[F.col(f"mh_{b * rows_per_band + r}")
-                                for r in range(rows_per_band)])
-        banded = sigs.select("id", key.alias("band_key"))
-        a, bdf = banded.alias("a"), banded.alias("b")
-        pair_dfs.append(
-            a.join(bdf, on="band_key")
+    band_rows = F.array(*[
+        F.struct(F.lit(b).alias("band"),
+                 F.concat_ws("", *[F.col(f"mh_{b * rows_per_band + r}")
+                                   for r in range(rows_per_band)]).alias("band_key"))
+        for b in range(bands)])
+    banded = sigs.select("id", F.inline(band_rows))
+    a, b = banded.alias("a"), banded.alias("b")
+    return (a.join(b, ["band", "band_key"])
             .where(F.col("a.id") < F.col("b.id"))
             .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        )
-    out = pair_dfs[0]
-    for p in pair_dfs[1:]:
-        out = out.unionByName(p)
-    return out.distinct()
+            .distinct())
 
 
 # ---------------------------------------------------------------- simhash
@@ -211,8 +189,9 @@ def simhash16(text: Column) -> Column:
 # recurs per plan; (b) higher-order array functions are CodegenFallback
 # (interpreted per element) at runtime.  These kernels compute the SAME
 # bytes (md5-derived, engine-independent) in one Arrow-batched pass and
-# compile in milliseconds; `minhash_signatures(impl=...)`/`simhash16_auto`
-# dispatch on width.  Mirrors `similarity.lsh_buckets_udf`.
+# compile in milliseconds; ``minhash_signatures`` always runs the lanes
+# kernel and ``q_dedup_simhash`` the simhash one.  Mirrors
+# ``similarity.lsh_buckets_udf``.
 
 import numpy as np
 
@@ -270,51 +249,6 @@ def _shingles_py(text: str, n: int) -> List[str]:
     return [" ".join(words[i:i + n]) for i in range(k)]
 
 
-def minhash_kernel(num_hashes: int = 4, shingle_n: int = 2):
-    """Factory: pandas UDF returning the array of 8-hex minhashes, value-
-    identical to ``minhash_column`` over ``word_shingles`` per seed."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def kernel(s: pd.Series) -> pd.Series:
-        md5 = hashlib.md5
-        suffixes = [f"#{j}".encode("utf-8") for j in range(num_hashes)]
-        # shingle -> per-seed 4-byte digests, memoized across the batch
-        # (byte-wise min == hex min since hex encoding is order-preserving).
-        # BOUNDED: an unbounded cache over a high-cardinality shingle space
-        # grows to ~10^6 entries (~150 MB) per worker and the random-access
-        # lookups thrash the shared L3 when several workers run — measured
-        # ANTI-scaling (extract ratio 1.3 at 4 slots).  65k entries keep the
-        # hot Zipf head resident in ~10 MB and misses just pay the md5.
-        # 0 disables the cache entirely (uniform/high-entropy vocabularies
-        # get ~no hits, so the dict is pure overhead there); env-tunable
-        # for workload shape.
-        cache: dict = {}
-        cache_cap = int(os.environ.get("SPARK_GRAFT_MINHASH_CACHE", "65536"))
-
-        def one(text):
-            if text is None:
-                return None
-            mins = None
-            for sh in _shingles_py(text, shingle_n):
-                ds = cache.get(sh)
-                if ds is None:
-                    e = sh.encode("utf-8")
-                    ds = [md5(e + suf).digest()[:4] for suf in suffixes]
-                    if len(cache) < cache_cap:
-                        cache[sh] = ds
-                if mins is None:
-                    mins = list(ds)
-                else:
-                    for j in range(num_hashes):
-                        if ds[j] < mins[j]:
-                            mins[j] = ds[j]
-            return [m.hex() for m in mins]
-
-        return s.map(one)
-
-    return kernel
-
-
 def minhash_lanes_column(shingles: Column, lane: int, group: int = 0) -> Column:
     """Semantic spec of the LANES minhash family: hash function ``4*group +
     lane`` is the 8-hex span ``[8*lane, 8*lane+8)`` of ``md5(shingle)``
@@ -323,7 +257,8 @@ def minhash_lanes_column(shingles: Column, lane: int, group: int = 0) -> Column:
     multiple-lanes-from-one-hash construction.  Lexicographic min on the
     hex span == numeric min on those 32 digest bits.  DuckDB-expressible
     as ``list_min(list_transform(shingles, s -> substr(md5(s), 1+8*lane,
-    8)))`` — same engine-portable determinism as ``minhash_column``."""
+    8)))``, so the oracle replays the same bytes.  The test reference for
+    ``minhash_lanes_kernel``."""
     suffix = F.lit("") if group == 0 else F.lit(f"#{group}")
     return F.array_min(F.transform(
         shingles,
@@ -332,14 +267,13 @@ def minhash_lanes_column(shingles: Column, lane: int, group: int = 0) -> Column:
 
 def minhash_lanes_kernel(num_hashes: int = 4, shingle_n: int = 2):
     """Arrow kernel for the lanes family — ONE md5 per shingle per GROUP of
-    four hash functions (vs one per shingle per function in
-    ``minhash_kernel``), with the per-lane minima reduced in numpy.
+    four hash functions, with the per-lane minima reduced in numpy.
 
-    This is the bench/scale path: the md5#seed family costs ``num_hashes``
-    md5 calls per shingle (~2.3 ms/page at 800 words, and the md5+dict hot
-    loop was the last non-scaling term in the 1v4 extract ablation,
-    BENCH.md §7); lanes cost ``ceil(num_hashes/4)`` md5 calls plus a
-    vectorized column-min (~0.7 ms/page, scales with task slots).  Value-
+    One md5 per shingle per hash function (the earlier md5#seed family)
+    measured ~2.3 ms/page at 800 words, and its md5+dict hot loop was the
+    last non-scaling term in the 1v4 extract ablation (BENCH.md §7); lanes
+    cost ``ceil(num_hashes/4)`` md5 calls plus a vectorized column-min
+    (~0.7 ms/page, scales with task slots).  Value-
     identical to ``minhash_lanes_column`` per lane
     (tests/test_datapipe.py::test_minhash_lanes_kernel_matches_expr);
     big-endian uint32 min == byte-lexicographic min == hex min."""

@@ -7,37 +7,25 @@ outputs are rounded to fixed decimals before comparison.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from scrapy_processors_spark.datapipe import dedup, multimodal, similarity, textstats
 from scrapy_processors_spark.datapipe.textstats import STOPWORDS
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str,
-       expensive: bool = True) -> DataFrame:
-    from scrapy_processors_spark.session import read_table
-
-    # Keyed scan fan-out, see session.read_table.  expensive=False for the
-    # batch-vectorized numpy embeddings paths (measured at sf0.1 and sf1.0:
-    # ann_lsh 0.9/1.3 s at natural width vs 1.9/1.9 s fanned).
-    return read_table(spark, sf_dir, name, expensive=expensive)
+from scrapy_processors_spark.session import read_table
 
 
 # ------------------------------------------------------------------ dedup
 def q_dedup_exact(spark, sf_dir):
-    return dedup.exact_dedup_groups(_t(spark, sf_dir, "documents"))
+    return dedup.exact_dedup_groups(read_table(spark, sf_dir, "documents"))
 
 
 def q_dedup_minhash(spark, sf_dir):
-    """r05: lanes family (one md5 per shingle, four 32-bit lanes from the
-    digest) through the adaptive Arrow kernel — replaces the interpreted
-    F.transform/array_min fold path that was the last CodegenFallback HOF
-    in a driver-query hot loop; the oracle replays the same family with
-    DuckDB list_min/list_transform."""
-    return dedup.minhash_pairs(_t(spark, sf_dir, "documents"),
-                               num_hashes=4, bands=2, shingle_n=2,
-                               impl="lanes")
+    """Lanes family (one md5 per shingle, four 32-bit lanes from the
+    digest) through the adaptive Arrow kernel, then one band join; the
+    oracle replays the same family with DuckDB list_min/list_transform and
+    one self-join per band."""
+    return dedup.minhash_pairs(read_table(spark, sf_dir, "documents"),
+                               num_hashes=4, bands=2, shingle_n=2)
 
 
 def q_dedup_simhash(spark, sf_dir):
@@ -48,13 +36,13 @@ def q_dedup_simhash(spark, sf_dir):
     bytes by construction, enforced by
     tests/test_datapipe.py::test_simhash_kernel_matches_fold; ``simhash16``
     stays as the Column-expression semantic spec."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.select("doc_id",
                        dedup.simhash16_kernel(F.col("text")).alias("simhash"))
 
 
 def q_ngram_jaccard(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     a = docs.select(F.col("doc_id").alias("id_a"), F.col("text").alias("ta"))
     b = docs.select(F.col("doc_id").alias("id_b"), F.col("text").alias("tb"))
     pairs = a.join(b, F.col("id_b") == F.col("id_a") + 1)
@@ -70,7 +58,7 @@ def q_embedding_dedup(spark, sf_dir):
     ``similarity.cosine_topk``.  IEEE-identical to
     ``cosine_similarity_fast`` per pair: same kernels, same
     ``dot / (norm_a * norm_b)`` JVM division order."""
-    emb = _t(spark, sf_dir, "embeddings", expensive=False)
+    emb = read_table(spark, sf_dir, "embeddings", expensive=False)
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"),
                    dedup.l2_norm_kernel(F.col("embedding")).alias("na"))
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"),
@@ -85,7 +73,7 @@ def q_embedding_dedup(spark, sf_dir):
 
 # ------------------------------------------------------------- similarity
 def q_ann_topk(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings", expensive=False)
+    emb = read_table(spark, sf_dir, "embeddings", expensive=False)
     queries = emb.where(F.col("vec_id") < 5)
     return similarity.cosine_topk(queries, emb, k=3)
 
@@ -95,7 +83,7 @@ def q_ann_lsh(spark, sf_dir):
     bucket assignment is reproducible in DuckDB (the oracle inlines the plane
     weights as literals and replays the same sequential double fold); recall
     vs the brute-force baseline is measured by ``similarity.lsh_recall``."""
-    emb = _t(spark, sf_dir, "embeddings", expensive=False)
+    emb = read_table(spark, sf_dir, "embeddings", expensive=False)
     queries = emb.where(F.col("vec_id") < 5)
     return similarity.lsh_bucketed_topk(queries, emb, k=3)
 
@@ -109,7 +97,7 @@ def q_ann_ivf(spark, sf_dir):
     ``similarity.ivf_recall`` in bench.py; this row verifies the IVF
     mechanics (assignment, n_probe explode, cluster equi-join, rank) end
     to end."""
-    emb = _t(spark, sf_dir, "embeddings", expensive=False)
+    emb = read_table(spark, sf_dir, "embeddings", expensive=False)
     queries = emb.where(F.col("vec_id") < 5)
     return similarity.ivf_topk(
         queries, emb, k=3, n_lists=8, n_probe=2,
@@ -118,14 +106,14 @@ def q_ann_ivf(spark, sf_dir):
 
 # -------------------------------------------------------------- textstats
 def q_lang_id(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     # two-projection form of lang_id: identical result, each regex pass
     # evaluated once (textstats.lang_id_two_phase docstring; r6)
     return textstats.lang_id_two_phase(docs, "doc_id")
 
 
 def q_token_count(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         textstats.token_count_ws(F.col("text")).alias("n_ws_tokens"),
@@ -134,18 +122,18 @@ def q_token_count(spark, sf_dir):
 
 
 def q_quality_score(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.select("doc_id", textstats.quality_score(F.col("text")).alias("quality"))
 
 
 def q_fingerprint(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.select("doc_id", textstats.fingerprint(F.col("text")).alias("fp"))
 
 
 def q_gopher_quality(spark, sf_dir):
     """Gopher-style repetition filter signals + keep/drop verdict."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     sig = textstats.repetition_signals(F.col("text"))
     return docs.select(
         "doc_id",
@@ -158,7 +146,7 @@ def q_gopher_quality(spark, sf_dir):
 def q_pii_scrub(spark, sf_dir):
     """Email + phone redaction over a deterministically PII-salted text (the
     raw documents contain no PII, so salt some in from doc_id)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     salted = F.concat(
         F.col("text"),
         F.lit(" contact user"), F.col("doc_id").cast("string"),
@@ -172,7 +160,7 @@ def q_multimodal_features(spark, sf_dir):
     decode is byte-chunk means (exact sum/len doubles), so the features are
     projected to scalar columns f0..f7 and hash-compared against a DuckDB
     oracle that replays the same byte folds over ``encode(text)``."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     feats = multimodal.extract_features(multimodal.media_from_documents(docs), fake=True)
     return feats.select(
         "media_id", "kind", "n_bytes", "duration_ms",
@@ -231,7 +219,7 @@ _SHINGLES = """
 
 
 def _minhash_oracle() -> str:
-    # lanes family (r05, matching q_dedup_minhash impl="lanes"): hash j is
+    # lanes family (the one q_dedup_minhash computes): hash j is
     # the 8-hex span [8*j, 8*j+8) of ONE md5(shingle) — lexicographic min
     # on the hex span == numeric min on those 32 digest bits
     mh = ",\n               ".join(

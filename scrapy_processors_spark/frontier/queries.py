@@ -7,7 +7,7 @@ external data); the canonicalization oracle reuses the exact regex rules of
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from scrapy_processors_spark.frontier.canonicalize import (
@@ -15,13 +15,7 @@ from scrapy_processors_spark.frontier.canonicalize import (
     canonicalize_url,
     url_host,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from scrapy_processors_spark.session import read_table
-
-    # Scale-adaptive keyed scan fan-out — see session.read_table.
-    return read_table(spark, sf_dir, name)
+from scrapy_processors_spark.session import read_table
 
 
 def _raw_url(docs: DataFrame) -> F.Column:
@@ -41,7 +35,7 @@ _RAW_URL_SQL = ("'HTTPS://Host' || CAST(doc_id % 50 AS VARCHAR) || "
 def q_url_canonicalize(spark, sf_dir):
     from scrapy_processors_spark import UrlCanonicalize
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id", UrlCanonicalize()(_raw_url(docs)).alias("canon_url")
     )
@@ -50,7 +44,7 @@ def q_url_canonicalize(spark, sf_dir):
 def q_url_seen_antijoin(spark, sf_dir):
     """URL-seen dedup shape: candidates anti-joined against a seen set (the
     exact backstop of the Bloom fast path)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     urls = docs.select(
         "doc_id",
         F.concat(F.lit("https://host"), (F.col("doc_id") % 97).cast("string"),
@@ -73,7 +67,7 @@ def q_url_seen_cuckoo(spark, sf_dir):
     cuckoo probe."""
     from scrapy_processors_spark.frontier import cuckoo
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     urls = docs.select(
         "doc_id",
         F.concat(F.lit("https://host"), (F.col("doc_id") % 97).cast("string"),
@@ -92,7 +86,7 @@ def q_url_seen_cuckoo(spark, sf_dir):
 
 def q_frontier_priority(spark, sf_dir):
     """Fetch-batch selection shape: priority ranking + top-k per host window."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     fr = docs.select(
         "doc_id",
         F.concat(F.lit("host"), (F.col("doc_id") % 20).cast("string")).alias("host"),
@@ -113,7 +107,7 @@ def q_url_latest_snapshot(spark, sf_dir):
     newest snapshot per url (standard step before extraction when the same
     url is fetched in multiple WARC epochs).  Window rank per url; total
     order (warc_ts DESC, doc_id DESC) so the pick is deterministic."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     pages = docs.select(
         "doc_id",
         F.concat(F.lit("https://host"), (F.col("doc_id") % 40).cast("string"),
@@ -139,7 +133,7 @@ def q_robots_parse(spark, sf_dir):
     the output).  Prefixes joined with '|' for hashing."""
     from scrapy_processors_spark.frontier.robots import parse_robots
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     c = F.col("doc_id") % 4
     did = F.col("doc_id").cast("string")
     body = (

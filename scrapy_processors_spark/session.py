@@ -162,6 +162,8 @@ def read_table(spark: SparkSession, sf_dir: str, name: str,
     costs more than the serial loss (measured: extract_digits 1.7 s at
     natural 6-way vs 3.3 s shuffled 16-way, while the kernel-bound
     price trio is 2.6-3.0 s shuffled vs 5.5-6.5 s at natural width).
+    The batch-vectorized numpy embeddings paths pass ``False`` too
+    (ann_lsh 0.9/1.3 s at natural width vs 1.9/1.9 s fanned, sf0.1/sf1.0).
 
     Set ``SPARK_GRAFT_SCAN_FANOUT=0`` to disable the fan-out (A/B knob)."""
     path = f"{sf_dir}/{name}.parquet"

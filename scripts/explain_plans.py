@@ -13,8 +13,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F
 
@@ -77,10 +79,11 @@ def main():
         ("ReadSchema pruned to 2 cols", lambda p: "struct<doc_id:bigint,n_chars:" in p),
     ])
 
-    # 4. minhash band join: shuffle join on band key, AQE enabled; r05 the
-    # signatures come from the lanes Arrow kernel (one fused ArrowEvalPython,
-    # computed once thanks to the persisted signatures table), never a
-    # row-at-a-time BatchEvalPython
+    # 4. minhash band join: one equi-join on (band, band_key), AQE enabled;
+    # the signatures come from the lanes Arrow kernel (one fused
+    # ArrowEvalPython, computed once thanks to the persisted signatures
+    # table that feeds both join sides), never a row-at-a-time
+    # BatchEvalPython
     mh = qs["dedup_minhash"](spark, sf_dir)
     add("dedup_minhash (LSH band join)", mh, [
         ("AQE on in the engine session posture (asserted on session.py — "
@@ -228,7 +231,7 @@ def main():
         "per kernel pipeline, broadcast of small join sides, AQE, and\n"
         "shuffle-free folds where the algorithm allows.\n\n"
     )
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(REPO / "PLANS.md", "w") as f:
         f.write(header + "\n".join(sections))
     for name, desc, ok in checks:
         print(("PASS " if ok else "FAIL "), name, "—", desc)

@@ -11,8 +11,10 @@ from __future__ import annotations
 import sys
 from datetime import date, datetime
 from decimal import Decimal
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 import duckdb
 

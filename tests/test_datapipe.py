@@ -2,6 +2,9 @@
 vector's twin first, textstats are consistent, multimodal plumbing yields the
 declared schema."""
 
+import hashlib
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -32,6 +35,76 @@ def test_minhash_finds_exact_dups(docs):
     pairs = {(r["id_a"], r["id_b"]) for r in dedup.minhash_pairs(docs).collect()}
     assert (0, 1) in pairs
     assert (0, 3) not in pairs and (1, 3) not in pairs
+    with pytest.raises(ValueError):
+        dedup.minhash_pairs(docs, impl="expr")
+
+
+def _lanes_signature(text, num_hashes, shingle_n=2):
+    """Driver-side lanes minhashes: hash 4*g + lane is the min over shingles
+    of hex span [8*lane, 8*lane+8) of md5(shingle [|| '#g'])."""
+    shingles = dedup._shingles_py(text, shingle_n)
+    sig = []
+    for g in range((num_hashes + 3) // 4):
+        suffix = "" if g == 0 else f"#{g}"
+        digests = [hashlib.md5((sh + suffix).encode("utf-8")).hexdigest()
+                   for sh in shingles]
+        sig.extend(min(d[8 * lane:8 * lane + 8] for d in digests)
+                   for lane in range(4))
+    return sig[:num_hashes]
+
+
+def _reference_pairs(rows, num_hashes, bands):
+    per_band = num_hashes // bands
+    buckets = {}
+    for doc_id, text in rows:
+        sig = _lanes_signature(text, num_hashes)
+        for b in range(bands):
+            key = "".join(sig[b * per_band:(b + 1) * per_band])
+            buckets.setdefault((b, key), []).append(doc_id)
+    return {(i, j) for ids in buckets.values() for i in ids for j in ids if i < j}
+
+
+def test_minhash_pairs_match_driver_reference(spark):
+    """The band join equals a pure-Python LSH over the same lanes hashes, at
+    two signature shapes and under both broadcast and sort-merge joins, and
+    the kernel runs once: exactly one ArrowEvalPython in the executed plan
+    (the persisted signatures feed both join sides)."""
+    base = ("near duplicate pages share most of their shingles so banded "
+            "minhash buckets collide for them with high probability today")
+    rows = [(10 + k, base + f" variant{k}") for k in range(4)]   # near-dup cluster
+    rows.append((20, base + " variant0"))                         # exact dup of 10
+    # partial overlaps: whether these collide depends on the hash family
+    words = base.split()
+    for k, (pos, n) in enumerate([(0, 5), (3, 6), (6, 5), (9, 6), (1, 7), (11, 5)]):
+        edited = list(words)
+        for j in range(n):
+            edited[(pos + 2 * j) % len(words)] = f"edit{k}_{j}"
+        rows.append((40 + k, " ".join(edited)))
+    rows += [(30, "an unrelated page about crawling frontiers and bloom filters"),
+             (31, "another unrelated document on spark joins and shuffles"),
+             (32, "word")]                                        # single shingle
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    try:
+        for num_hashes, bands in ((8, 4), (4, 2)):
+            want = _reference_pairs(rows, num_hashes, bands)
+            cluster = {(i, j) for i in range(10, 14) for j in range(i + 1, 14)}
+            assert (10, 20) in want and len(want & cluster) >= 3
+            for threshold in (saved, "-1"):
+                spark.conf.set(key, threshold)
+                out = dedup.minhash_pairs(docs, num_hashes=num_hashes, bands=bands)
+                got = {(r["id_a"], r["id_b"]) for r in out.collect()}
+                assert got == want, (num_hashes, bands, threshold)
+                plan = out._jdf.queryExecution().explainString(
+                    spark._jvm.org.apache.spark.sql.execution.ExplainMode
+                    .fromString("formatted"))
+                join = "SortMergeJoin" if threshold == "-1" else "BroadcastHashJoin"
+                assert join in plan, (num_hashes, bands, threshold)
+                assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1
+    finally:
+        spark.conf.set(key, saved)
+        dedup.release_minhash_cache()
 
 
 def test_minhash_cache_bounded(spark, docs):
@@ -205,17 +278,6 @@ def test_simhash_kernel_matches_fold(docs):
     assert out, "empty comparison"
     for r in out:
         assert r["expr"] == r["kern"], r["doc_id"]
-
-
-def test_minhash_kernel_matches_expr(docs):
-    expr = dedup.minhash_signatures(docs, impl="expr").collect()
-    kern = dedup.minhash_signatures(docs, impl="kernel").collect()
-    by_id_e = {r["id"]: tuple(r[f"mh_{j}"] for j in range(4)) for r in expr}
-    by_id_k = {r["id"]: tuple(r[f"mh_{j}"] for j in range(4)) for r in kern}
-    assert by_id_e == by_id_k
-    # auto dispatch: wide signatures go to the kernel, narrow stay expr
-    wide = dedup.minhash_signatures(docs, num_hashes=8)
-    assert "ArrowEvalPython" in wide._jdf.queryExecution().executedPlan().toString()
 
 
 def test_stop_count_rx_matches_fold(spark):
@@ -452,16 +514,6 @@ def test_minhash_lanes_kernel_adaptive_paths(spark):
         for r in df.select(k(F.col("text")).alias("kern"), *expr_cols).collect():
             for i in range(4):
                 assert r["kern"][i] == r[f"e{i}"]
-
-
-def test_minhash_pairs_impls_find_exact_dups(docs):
-    """All three signature impls/families produce candidate sets containing
-    the exact duplicates (family changes which NEAR-dups collide, never
-    whether identical texts do)."""
-    for impl in ("expr", "kernel", "lanes"):
-        pairs = {(r["id_a"], r["id_b"])
-                 for r in dedup.minhash_pairs(docs, impl=impl).collect()}
-        assert (0, 1) in pairs, impl
 
 
 def test_cosine_kernels_match_folds(spark):
