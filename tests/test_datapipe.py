@@ -35,8 +35,6 @@ def test_minhash_finds_exact_dups(docs):
     pairs = {(r["id_a"], r["id_b"]) for r in dedup.minhash_pairs(docs).collect()}
     assert (0, 1) in pairs
     assert (0, 3) not in pairs and (1, 3) not in pairs
-    with pytest.raises(ValueError):
-        dedup.minhash_pairs(docs, impl="expr")
 
 
 def _lanes_signature(text, num_hashes, shingle_n=2):
@@ -514,6 +512,17 @@ def test_minhash_lanes_kernel_adaptive_paths(spark):
         for r in df.select(k(F.col("text")).alias("kern"), *expr_cols).collect():
             for i in range(4):
                 assert r["kern"][i] == r[f"e{i}"]
+
+
+def test_minhash_pairs_impls_find_exact_dups(docs):
+    """The lanes family, the only signature impl left, puts the exact
+    duplicates in its candidate set; the removed families are rejected."""
+    pairs = {(r["id_a"], r["id_b"])
+             for r in dedup.minhash_pairs(docs, impl="lanes").collect()}
+    assert (0, 1) in pairs
+    for impl in ("expr", "kernel", "auto"):
+        with pytest.raises(ValueError):
+            dedup.minhash_pairs(docs, impl=impl)
 
 
 def test_cosine_kernels_match_folds(spark):
