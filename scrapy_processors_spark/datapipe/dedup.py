@@ -108,8 +108,10 @@ def minhash_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     """Candidate near-dup pairs ``(id_a, id_b)``, ``id_a < id_b``: docs that
     share any band key (the concatenated minhashes of one band).  Each
     signature row becomes ``bands`` rows of ``(id, band, band_key)``, joined
-    once on ``(band, band_key)`` and de-duplicated.  ``impl`` accepts only
-    ``"lanes"``, the one signature family.
+    once on ``(band, band_key)`` and de-duplicated.  A null text has null
+    minhashes, hence a null band key (``F.concat``), which joins nothing —
+    as in the oracle, where ``a.mh_0 = b.mh_0`` is never true on null.
+    ``impl`` accepts only ``"lanes"``, the one signature family.
 
     Caller contract: the signatures table is persisted lazily and stays
     cached until the next ``minhash_pairs`` call or an explicit
@@ -123,8 +125,8 @@ def minhash_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     rows_per_band = num_hashes // bands
     band_rows = F.array(*[
         F.struct(F.lit(b).alias("band"),
-                 F.concat_ws("", *[F.col(f"mh_{b * rows_per_band + r}")
-                                   for r in range(rows_per_band)]).alias("band_key"))
+                 F.concat(*[F.col(f"mh_{b * rows_per_band + r}")
+                            for r in range(rows_per_band)]).alias("band_key"))
         for b in range(bands)])
     banded = sigs.select("id", F.inline(band_rows))
     a, b = banded.alias("a"), banded.alias("b")
@@ -400,14 +402,15 @@ def cosine_similarity(vec_a: Column, vec_b: Column) -> Column:
 # The ``dot_product``/``l2_norm`` folds above are the semantic spec, but
 # ``F.aggregate``/``F.zip_with`` are CodegenFallback — interpreted per
 # ELEMENT — and they sit in the per-pair hot loop of every similarity
-# path (cosine_topk / lsh_bucketed_topk / ivf_topk / embedding_dedup).
+# path (the one ``similarity`` scorer behind cosine_topk, the LSH and IVF
+# top-k and their index searches; embedding_dedup).
 # At 64 dims x bucketed candidates that is tolerable; at production
 # 768-dim embeddings it is the same class of scale-killer the lang_id
 # stopword fold and the fingerprint fold were (BENCH.md §7).  These
 # kernels compute the SAME IEEE doubles in one Arrow pass: the inner
 # loop accumulates PER DIMENSION (acc = acc + a[:, i] * b[:, i]), which
 # preserves the sequential left-fold order exactly — np.dot/BLAS would
-# reorder the sum (the trick proven in ``similarity.lsh_buckets_udf``).
+# reorder the sum (the fold ``similarity._left_fold_dots`` keeps).
 # Null semantics replicate the folds: null array or length mismatch
 # (zip_with pads with null) -> null result.  One unavoidable caveat: a
 # null ELEMENT inside a vector reaches a pandas UDF as NaN (Arrow
@@ -425,17 +428,6 @@ def _fold_dot_one(a, b):
         if x is None or y is None:
             return None
         acc = acc + float(x) * float(y)
-    return acc
-
-
-def _fold_sq_one(a):
-    if a is None:
-        return None
-    acc = 0.0
-    for x in a:
-        if x is None:
-            return None
-        acc = acc + float(x) * float(x)
     return acc
 
 
@@ -460,26 +452,25 @@ def _batch_fold(vals: list, vectorized) -> list:
     return out
 
 
+def _sum_dims(prod: "np.ndarray") -> "np.ndarray":
+    """Row sums of an (n, dim) product matrix as the per-dimension left fold.
+    r6: in-place adds over contiguous rows of the transpose — the same
+    one-add-per-dimension order (bit-identical; equivalence suite) without
+    2 array allocs and a strided column read per dimension."""
+    prodT = np.ascontiguousarray(prod.T)
+    acc = np.zeros(prod.shape[0], dtype=np.float64)
+    for i in range(prodT.shape[0]):
+        acc += prodT[i]
+    return acc
+
+
 @F.pandas_udf(T.DoubleType())
 def dot_product_kernel(va: pd.Series, vb: pd.Series) -> pd.Series:
     vals = [((a, b), _fold_dot_one) for a, b in zip(va, vb)]
     nn = [k for k, ((a, b), _) in enumerate(vals) if a is not None and b is not None]
     out: list = [None] * len(vals)
-
-    def vec(mats):
-        a, b = mats
-        # r6: one vectorized multiply, then in-place adds over contiguous
-        # rows of the transposed product — same one-add-per-dimension left
-        # fold (bit-identical; equivalence suite) without 2 array allocs
-        # and a strided column read per dimension
-        abT = np.ascontiguousarray((a * b).T)
-        acc = np.zeros(a.shape[0], dtype=np.float64)
-        for i in range(abT.shape[0]):
-            acc += abT[i]
-        return acc
-
     if nn:
-        sub = _batch_fold([vals[k] for k in nn], vec)
+        sub = _batch_fold([vals[k] for k in nn], lambda m: _sum_dims(m[0] * m[1]))
         for k, v in zip(nn, sub):
             out[k] = v
     return pd.Series(out, index=va.index, dtype=object)
@@ -487,22 +478,14 @@ def dot_product_kernel(va: pd.Series, vb: pd.Series) -> pd.Series:
 
 @F.pandas_udf(T.DoubleType())
 def l2_norm_kernel(va: pd.Series) -> pd.Series:
-    vals = [((a,), _fold_sq_one) for a in va]
+    def fold(a):  # one matrix per batch, not a second copy of it
+        return _fold_dot_one(a, a)
+
+    vals = [((a,), fold) for a in va]
     nn = [k for k, ((a,), _) in enumerate(vals) if a is not None]
     out: list = [None] * len(vals)
-
-    def vec(mats):
-        a = mats[0]
-        # r6: same contiguous-transpose reformulation as dot_product_kernel
-        # (bit-identical left fold)
-        sqT = np.ascontiguousarray((a * a).T)
-        acc = np.zeros(a.shape[0], dtype=np.float64)
-        for i in range(sqT.shape[0]):
-            acc += sqT[i]
-        return acc
-
     if nn:
-        sub = _batch_fold([vals[k] for k in nn], vec)
+        sub = _batch_fold([vals[k] for k in nn], lambda m: _sum_dims(m[0] * m[0]))
         for k, v in zip(nn, sub):
             out[k] = None if v is None else float(np.sqrt(v))
     return pd.Series(out, index=va.index, dtype=object)

@@ -1,9 +1,11 @@
-"""Similarity search over embedding columns.
+"""Similarity search over embedding columns.  One scorer serves every
+path: ``_side`` builds a join side with its norm, ``_cos`` scores the
+joined pairs, ``_rank`` keeps the top k per query; the paths differ only in
+which pairs they join:
 
 - ``cosine_topk``: brute-force top-k — query set broadcast against the
   candidate table (crossJoin with a broadcast hint: no shuffle of the big
-  side; each executor scans its candidate partitions once), ranked with a
-  window partitioned by query id.
+  side; each executor scans its candidate partitions once).
 - ``lsh_bucketed_topk``: scale path #1 — random-hyperplane LSH buckets
   (deterministic md5-seeded planes) shrink the candidate set per query to its
   bucket before the exact cosine rank.  At 100 TB the bucket join shuffles
@@ -12,9 +14,15 @@
   spherical-k-means coarse quantizer; queries probe their n_probe nearest
   lists.  Both approximate paths report recall@k vs the brute-force
   baseline (``lsh_recall`` / ``ivf_recall``).
+
+The build-once/search-many pairs ``lsh_build_index``/``lsh_search`` and
+``ivf_build_index``/``ivf_search`` share their side builder and rank with
+the one-shot call.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 import numpy as np
 import pandas as pd
@@ -26,28 +34,28 @@ from pyspark.sql import types as T
 from scrapy_processors_spark.datapipe.dedup import dot_product_kernel, l2_norm_kernel
 
 
-def cosine_topk(queries: DataFrame, candidates: DataFrame, k: int = 3,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                round_digits: int = 4) -> DataFrame:
-    """Brute-force cosine top-k.  ``queries`` is expected to be small (it is
-    broadcast); ranking ties break on candidate id for determinism.
+def _side(df: DataFrame, id_col: str, vec_col: str, role: str, *extra) -> DataFrame:
+    """``(query_id, qv, qn)`` for role "query", ``(cand_id, cv, cn)`` for
+    "cand", plus ``extra`` columns in the same select.  Norms are
+    precomputed per SIDE before the join (|Q|+|C| folds), not per
+    pair inside it (|Q|x|C| folds x3): identical IEEE result, a 3x cut in
+    per-pair work — the term that dominates at 100 TB."""
+    r = role[0]
+    return df.select(F.col(id_col).alias(f"{role}_id"), F.col(vec_col).alias(f"{r}v"),
+                     l2_norm_kernel(F.col(vec_col)).alias(f"{r}n"), *extra)
 
-    Norms are precomputed per SIDE before the crossJoin (|Q|+|C| folds),
-    not per pair inside it (|Q|x|C| folds x3): identical IEEE result, a 3x
-    cut in per-pair work — the term that dominates at 100 TB."""
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-                       l2_norm_kernel(F.col(vec_col)).alias("qn"))
-    c = candidates.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"),
-                          l2_norm_kernel(F.col(vec_col)).alias("cn"))
-    scored = (
-        F.broadcast(q).crossJoin(c)
-        .where(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id", "cand_id",
-            F.round(dot_product_kernel(F.col("qv"), F.col("cv"))
-                    / (F.col("qn") * F.col("cn")), round_digits).alias("cos"),
-        )
+
+def _cos(pairs: DataFrame, round_digits: int) -> DataFrame:
+    """``(query_id, cand_id, cos)`` of joined sides, self-pairs dropped."""
+    return pairs.where(F.col("query_id") != F.col("cand_id")).select(
+        "query_id", "cand_id",
+        F.round(dot_product_kernel(F.col("qv"), F.col("cv"))
+                / (F.col("qn") * F.col("cn")), round_digits).alias("cos"),
     )
+
+
+def _rank(scored: DataFrame, k: int) -> DataFrame:
+    """Top ``k`` per query by cosine, ties broken on candidate id."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -56,24 +64,23 @@ def cosine_topk(queries: DataFrame, candidates: DataFrame, k: int = 3,
     )
 
 
-def _hyperplane(dim: int, seed: int) -> list:
-    """Deterministic pseudo-random unit-free hyperplane from md5 bytes."""
-    import hashlib
-
-    vals = []
-    i = 0
-    while len(vals) < dim:
-        h = hashlib.md5(f"plane-{seed}-{i}".encode()).digest()
-        for b in h:
-            vals.append((b / 255.0) - 0.5)
-            if len(vals) == dim:
-                break
-        i += 1
-    return vals
+def cosine_topk(queries: DataFrame, candidates: DataFrame, k: int = 3,
+                id_col: str = "vec_id", vec_col: str = "embedding",
+                round_digits: int = 4) -> DataFrame:
+    """Brute-force cosine top-k.  ``queries`` is expected to be small (it is
+    broadcast); ranking ties break on candidate id for determinism."""
+    q = _side(queries, id_col, vec_col, "query")
+    c = _side(candidates, id_col, vec_col, "cand")
+    return _rank(_cos(F.broadcast(q).crossJoin(c), round_digits), k)
 
 
-def _recall_vs_exact(exact: DataFrame, approx: DataFrame) -> float:
-    """|approx ∩ exact| / |exact| over (query_id, cand_id) pairs."""
+def _recall_vs_exact(queries: DataFrame, candidates: DataFrame, k: int,
+                     exact: "DataFrame | None", approx: DataFrame) -> float:
+    """|approx ∩ exact| / |exact| over (query_id, cand_id) pairs, ``exact``
+    computed by ``cosine_topk`` unless given."""
+    if exact is None:
+        exact = cosine_topk(queries, candidates, k=k)
+    exact = exact.select("query_id", "cand_id")
     n_exact = exact.count()
     if n_exact == 0:
         return 1.0
@@ -89,17 +96,51 @@ def lsh_recall(queries: DataFrame, candidates: DataFrame, k: int = 3,
     only 'done' once this number is reported — VERDICT r01 §5).  Pass a
     precomputed ``exact`` pair frame to amortize the brute-force baseline
     across several recall measurements."""
-    if exact is None:
-        exact = cosine_topk(queries, candidates, k=k).select("query_id", "cand_id")
-    approx = lsh_bucketed_topk(queries, candidates, k=k, **lsh_kwargs) \
-        .select("query_id", "cand_id")
-    return _recall_vs_exact(exact, approx)
+    approx = lsh_bucketed_topk(queries, candidates, k=k, **lsh_kwargs)
+    return _recall_vs_exact(queries, candidates, k, exact, approx)
 
 
+def _md5_floats(tag: str, dim: int) -> list:
+    """Deterministic pseudo-random unit-free vector: the bytes of
+    md5(f"{tag}-0"), md5(f"{tag}-1"), ... mapped to b / 255 - 0.5."""
+    raw = b"".join(hashlib.md5(f"{tag}-{i}".encode()).digest()
+                   for i in range((dim + 15) // 16))
+    return [(b / 255.0) - 0.5 for b in raw[:dim]]
+
+
+def _unit_rows(m: np.ndarray) -> np.ndarray:
+    """Rows L2-normalized; all-zero rows stay zero."""
+    n = np.linalg.norm(m, axis=1, keepdims=True)
+    n[n == 0] = 1.0
+    return m / n
+
+
+def _left_fold_dots(v: np.ndarray, w_cols: np.ndarray) -> np.ndarray:
+    """``v @ w_cols`` (n, dim) x (dim, m), every cell a sequential left fold
+    from 0.0 in dimension order — the IEEE order the DuckDB oracles'
+    ``list_reduce(list_prepend(0.0, ...))`` replays bit for bit (np.dot/BLAS
+    would reorder the sum and could flip a near-zero projection's sign).
+    r6: 512-row blocks, one in-place add per dimension (264 -> 142 ms on
+    20k rows vs reallocating (n, m) per dimension); same order per cell."""
+    n, m = v.shape[0], w_cols.shape[1]
+    acc = np.empty((n, m), dtype=np.float64)
+    B = 512
+    for s0 in range(0, n, B):
+        blk = v[s0:s0 + B]
+        sub = np.zeros((blk.shape[0], m), dtype=np.float64)
+        tmp = np.empty_like(sub)
+        for i in range(w_cols.shape[0]):
+            np.multiply(blk[:, i:i + 1], w_cols[i][None, :], out=tmp)
+            sub += tmp
+        acc[s0:s0 + B] = sub
+    return acc
+
+
+# --------------------------------------------------------------------- LSH
 def lsh_tables(dim: int, n_planes: int, n_tables: int) -> list:
     """Deterministic plane sets: table t uses seeds t*n_planes..t*n_planes+p."""
     return [
-        [_hyperplane(dim, t * n_planes + p) for p in range(n_planes)]
+        [_md5_floats(f"plane-{t * n_planes + p}", dim) for p in range(n_planes)]
         for t in range(n_tables)
     ]
 
@@ -110,55 +151,42 @@ def lsh_buckets_udf(tables: list, dim: int):
     The pure-Column alternative (n_tables * n_planes ``F.aggregate`` folds of
     ``dim`` literal terms each) builds a ~20k-node expression tree that blows
     past JVM codegen method limits and falls back to interpreted eval
-    (measured 87 s for 5k vectors at 16x5x64).  Here the dots are one numpy
-    pass; the inner loop accumulates PER DIMENSION (acc += v[:,i] * w[p,i]),
-    which preserves the sequential left-fold IEEE order of the DuckDB
-    oracle's ``list_reduce`` exactly — np.dot/BLAS would reorder the sum and
-    could flip the sign of a near-zero projection."""
-    weights = np.array(
-        [[plane for plane in tbl] for tbl in tables], dtype=np.float64
-    )  # (n_tables, n_planes, dim)
+    (measured 87 s for 5k vectors at 16x5x64).  Here every plane of every
+    table is one column of a single ``_left_fold_dots`` pass (r06: dim_w
+    numpy ops per batch instead of n_tables*n_planes*dim_w tiny ones), whose
+    per-dimension fold is the DuckDB oracle's ``list_reduce`` order."""
+    weights = np.array(tables, dtype=np.float64)  # (n_tables, n_planes, dim)
     n_tables, n_planes, dim_w = weights.shape
-    # r06: all planes accumulate in ONE (n, n_tables*n_planes) matrix —
-    # dim_w numpy ops per batch instead of n_tables*n_planes*dim_w tiny
-    # ones (5,120 at 16x5x64; each was overhead-dominated at Arrow batch
-    # sizes).  acc[r, p] still sums v[r, i] * w[p, i] sequentially in
-    # dimension order i = 0..dim-1 — each (row, plane) cell accumulates
-    # independently, so the IEEE result is bit-identical to the per-plane
-    # loop and to the oracle's list_reduce fold.
-    flat_w = weights.reshape(n_tables * n_planes, dim_w)
+    w_cols = np.ascontiguousarray(weights.reshape(n_tables * n_planes, dim_w).T)
     powers = (1 << np.arange(n_planes, dtype=np.int32))
-
-    # r6: row-blocked accumulator (B=512: sub/tmp stay cache-resident and
-    # `acc = acc + ...` no longer reallocates the full (n, tables*planes)
-    # matrix per dimension — measured 264 -> 142 ms on 20k rows).  Each
-    # (row, plane) cell still sums v[r, i] * w[p, i] sequentially in
-    # dimension order i = 0..dim-1, one in-place add per dimension, so the
-    # IEEE result stays bit-identical to the oracle's list_reduce fold.
-    w_cols = np.ascontiguousarray(flat_w.T)  # (dim, n_tables*n_planes)
-    n_tp = n_tables * n_planes
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def buckets(vecs: pd.Series) -> pd.Series:
         if not len(vecs):  # empty Arrow batch: np.array([]) is 1-D
             return pd.Series([], dtype=object)
         v = np.array(vecs.to_list(), dtype=np.float64)  # (n, dim)
-        n = v.shape[0]
-        acc = np.empty((n, n_tp), dtype=np.float64)
-        B = 512
-        for s0 in range(0, n, B):
-            blk = v[s0:s0 + B]
-            sub = np.zeros((blk.shape[0], n_tp), dtype=np.float64)
-            tmp = np.empty_like(sub)
-            for i in range(dim_w):
-                np.multiply(blk[:, i:i + 1], w_cols[i][None, :], out=tmp)
-                sub += tmp
-            acc[s0:s0 + B] = sub
-        bits = (acc > 0).reshape(n, n_tables, n_planes)
+        bits = (_left_fold_dots(v, w_cols) > 0).reshape(len(v), n_tables, n_planes)
         out = (bits * powers[None, None, :]).sum(axis=2).astype(np.int32)
         return pd.Series(list(out))
 
     return buckets
+
+
+def _lsh_side(df: DataFrame, id_col: str, vec_col: str, role: str,
+              dim: int, n_planes: int, n_tables: int) -> DataFrame:
+    """``_side`` exploded onto its (table_id, bucket) keys; the norm sits
+    below the Generate, so it runs once per vector, not once per table."""
+    side = _side(df, id_col, vec_col, role)
+    buckets = lsh_buckets_udf(lsh_tables(dim, n_planes, n_tables), dim)
+    return side.select(
+        "*", F.posexplode(buckets(F.col(f"{role[0]}v"))).alias("table_id", "bucket"))
+
+
+def _lsh_rank(q: DataFrame, c: DataFrame, k: int, round_digits: int) -> DataFrame:
+    """Broadcast bucket join; a pair matching in several tables scores once
+    (``distinct``) before the exact cosine rank."""
+    pairs = F.broadcast(q).join(c, on=["table_id", "bucket"])
+    return _rank(_cos(pairs, round_digits).distinct(), k)
 
 
 def lsh_bucketed_topk(queries: DataFrame, candidates: DataFrame, k: int = 3,
@@ -177,55 +205,14 @@ def lsh_bucketed_topk(queries: DataFrame, candidates: DataFrame, k: int = 3,
 
     At scale: candidates are exploded x n_tables onto (table, bucket) keys —
     the shuffle is (table,bucket)-partitioned and never all-pairs; at 100 TB
-    the exploded candidate index is what you'd materialize once (IVF-style)
-    and reuse across query batches.  Recall < 1 by construction; the
-    brute-force variant is the correctness baseline and
-    ``lsh_recall`` reports recall@k."""
-    tables = lsh_tables(dim, n_planes, n_tables)
-    buckets_udf = lsh_buckets_udf(tables, dim)
-
-    def with_buckets(df: DataFrame, idc: str, vc: str) -> DataFrame:
-        return df.select(
-            "*",
-            F.posexplode(buckets_udf(F.col(vc))).alias("table_id", "bucket"),
-        )
-
-    q = with_buckets(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-                       l2_norm_kernel(F.col(vec_col)).alias("qn")),
-        "query_id", "qv")
-    c = with_buckets(
-        candidates.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"),
-                          l2_norm_kernel(F.col(vec_col)).alias("cn")),
-        "cand_id", "cv")
-    scored = (
-        F.broadcast(q).join(c, on=["table_id", "bucket"])
-        .where(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id", "cand_id",
-            F.round(dot_product_kernel(F.col("qv"), F.col("cv"))
-                    / (F.col("qn") * F.col("cn")), round_digits).alias("cos"),
-        )
-        .distinct()  # a pair matching in several tables scores once
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cos", "rank")
-    )
-
-
-# --------------------------------------------------------------------- IVF
-# Inverted-file ANN — the second classic scale path next to LSH (the task
-# brief names both).  Coarse quantizer = deterministic spherical k-means;
-# candidates are indexed by nearest centroid, queries probe their n_probe
-# nearest lists, and the exact cosine rank runs inside the probed lists
-# only.  Every data-sized operation is a map or an equi-join on cluster_id
-# (AQE-balanceable); the only driver-side state is the (n_lists, dim)
-# centroid matrix — e.g. 4096x768 floats = 12 MB at production sizes,
-# broadcast-friendly.  No DuckDB oracle by design (k-means is iterative);
-# accuracy is reported as recall@k vs the brute-force baseline, like LSH.
+    the exploded candidate index is what you'd materialize once
+    (``lsh_build_index``) and reuse across query batches (``lsh_search``).
+    Recall < 1 by construction; the brute-force variant is the correctness
+    baseline and ``lsh_recall`` reports recall@k."""
+    shape = (dim, n_planes, n_tables)
+    return _lsh_rank(_lsh_side(queries, id_col, vec_col, "query", *shape),
+                     _lsh_side(candidates, id_col, vec_col, "cand", *shape),
+                     k, round_digits)
 
 
 def lsh_build_index(candidates: DataFrame, path: str,
@@ -242,16 +229,10 @@ def lsh_build_index(candidates: DataFrame, path: str,
     identical planes.  Partition-count note: defaults give
     n_tables * 2^n_planes = 512 directories; at wider codes partition by
     table_id only and let bucket be a pushed-down data filter."""
-    tables = lsh_tables(dim, n_planes, n_tables)
-    buckets_udf = lsh_buckets_udf(tables, dim)
-    c = candidates.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"),
-        l2_norm_kernel(F.col(vec_col)).alias("cn"),
-        F.posexplode(buckets_udf(F.col(vec_col))).alias("table_id", "bucket"))
-    c.write.mode("overwrite").partitionBy("table_id", "bucket").parquet(path)
-    spark = candidates.sparkSession
-    spark.createDataFrame([(dim, n_planes, n_tables)],
-                          "dim int, n_planes int, n_tables int") \
+    _lsh_side(candidates, id_col, vec_col, "cand", dim, n_planes, n_tables) \
+        .write.mode("overwrite").partitionBy("table_id", "bucket").parquet(path)
+    candidates.sparkSession.createDataFrame(
+        [(dim, n_planes, n_tables)], "dim int, n_planes int, n_tables int") \
         .coalesce(1).write.mode("overwrite").parquet(f"{path}/_params")
 
 
@@ -259,34 +240,29 @@ def lsh_search(spark, path: str, queries: DataFrame, k: int = 3,
                id_col: str = "vec_id", vec_col: str = "embedding",
                round_digits: int = 4) -> DataFrame:
     """Serve top-k from a materialized ``lsh_build_index`` directory:
-    queries explode onto their (table_id, bucket) keys, the equi-join
-    dynamic-partition-prunes the index scan to the probed buckets, pairs
-    dedup before the exact cosine rank — semantics identical to
-    ``lsh_bucketed_topk`` for the same (dim, n_planes, n_tables)."""
+    queries explode onto their (table_id, bucket) keys, broadcast
+    equi-joined to the index, pairs dedup before the exact cosine rank —
+    semantics identical to ``lsh_bucketed_topk`` for the same
+    (dim, n_planes, n_tables).  Spark drops the planned dynamic partition
+    pruning (its subquery cannot reuse a broadcast side holding Python
+    UDFs), so today the index scan reads every partition."""
     p = spark.read.parquet(f"{path}/_params").collect()[0]
-    tables = lsh_tables(p["dim"], p["n_planes"], p["n_tables"])
-    buckets_udf = lsh_buckets_udf(tables, p["dim"])
-    c = spark.read.parquet(path)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        l2_norm_kernel(F.col(vec_col)).alias("qn"),
-        F.posexplode(buckets_udf(F.col(vec_col))).alias("table_id", "bucket"))
-    scored = (
-        F.broadcast(q).join(c, on=["table_id", "bucket"])
-        .where(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id", "cand_id",
-            F.round(dot_product_kernel(F.col("qv"), F.col("cv"))
-                    / (F.col("qn") * F.col("cn")), round_digits).alias("cos"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cos", "rank")
-    )
+    q = _lsh_side(queries, id_col, vec_col, "query",
+                  p["dim"], p["n_planes"], p["n_tables"])
+    return _lsh_rank(q, spark.read.parquet(path), k, round_digits)
+
+
+# --------------------------------------------------------------------- IVF
+# Inverted-file ANN — the second classic scale path next to LSH.  Coarse
+# quantizer = deterministic spherical k-means; candidates are indexed by
+# nearest centroid, queries probe their n_probe nearest lists, and the
+# exact cosine rank runs inside the probed lists only.  Every data-sized
+# operation is a map or an equi-join on cluster_id (AQE-balanceable); the
+# only driver-side state is the (n_lists, dim) centroid matrix — e.g.
+# 4096x768 floats = 12 MB at production sizes, broadcast-friendly.  No
+# DuckDB oracle for the Lloyd centroids (k-means is iterative); accuracy is
+# reported as recall@k vs the brute-force baseline, like LSH.  Pinned
+# centroids (``ivf_fixed_centroids``) are oracle-replayed.
 
 
 def ivf_centroids(candidates: DataFrame, n_lists: int = 16, n_iters: int = 5,
@@ -313,41 +289,30 @@ def ivf_centroids(candidates: DataFrame, n_lists: int = 16, n_iters: int = 5,
     dim = len(first["v"])
     c = candidates.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("v"))
 
-    def mean_by(df: DataFrame, key_col) -> dict:
+    def unit_means(df: DataFrame, key_col, base: np.ndarray) -> np.ndarray:
+        # base with each non-empty list's row replaced by its mean, normalized
         rows = (
             df.select(key_col.alias("cl"), F.posexplode("v").alias("pos", "x"))
             .groupBy("cl", "pos").agg(F.avg("x").alias("m"))
             .collect()
         )
-        out: dict = {}
+        out = base.copy()
         for r in rows:
-            out.setdefault(r["cl"], np.zeros(dim))[r["pos"]] = r["m"]
-        return out
-
-    def normed(m: np.ndarray) -> np.ndarray:
-        n = np.linalg.norm(m, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        return m / n
+            out[int(r["cl"]), r["pos"]] = r["m"]
+        return _unit_rows(out)
 
     # xxhash64(cid) makes the init grouping deterministic for ANY id type —
     # pmod on a raw string id yields null and crashed the cents[] fill
     # (ADVICE r04); for integral ids the grouping differs from plain
     # `cid % n_lists` but is equally arbitrary, and Lloyd iterations wash
     # out the init choice.
-    means = mean_by(c, F.pmod(F.xxhash64(F.col("cid")), F.lit(n_lists)))
-    cents = np.zeros((n_lists, dim))
-    for j, m in means.items():
-        cents[int(j)] = m
-    cents = normed(cents)
+    cents = unit_means(c, F.pmod(F.xxhash64(F.col("cid")), F.lit(n_lists)),
+                       np.zeros((n_lists, dim)))
 
     for _ in range(n_iters):
         assign = ivf_assign_udf(cents, n_probe=1)
         assigned = c.select(F.get(assign(F.col("v")), 0).alias("cl"), "v")
-        means = mean_by(assigned, F.col("cl"))
-        new = cents.copy()
-        for j, m in means.items():
-            new[int(j)] = m
-        new = normed(new)
+        new = unit_means(assigned, F.col("cl"), cents)
         if np.allclose(new, cents, atol=1e-12):
             break
         cents = new
@@ -360,23 +325,21 @@ def ivf_assign_udf(centroids: np.ndarray, n_probe: int = 1):
     by centroid id.  Per-row output depends only on that row — deterministic
     under any partitioning.
 
-    r05: the dots are RAW (unnormalized) and accumulate PER DIMENSION —
-    the row norm is a positive per-row constant, so the nearest-centroid
-    ORDER is identical to the cosine argsort, while each sim becomes the
-    exact sequential left-fold a SQL ``list_reduce`` replays bit-for-bit
-    (same trick as ``lsh_buckets_udf``).  That makes pinned-centroid IVF
-    assignment oracle-replayable (``ann_ivf``)."""
+    r05: the dots are RAW (unnormalized) ``_left_fold_dots`` — the row norm
+    is a positive per-row constant, so the nearest-centroid ORDER is
+    identical to the cosine argsort, while each sim is the exact sequential
+    left fold a SQL ``list_reduce`` replays bit-for-bit (the same fold as
+    ``lsh_buckets_udf``).  That makes pinned-centroid IVF assignment
+    oracle-replayable (``ann_ivf``)."""
     cents = np.asarray(centroids, dtype=np.float64)
     kp = min(n_probe, cents.shape[0])
+    w_cols = np.ascontiguousarray(cents.T)  # (dim, n_lists)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def assign(vecs: pd.Series) -> pd.Series:
         if not len(vecs):  # empty Arrow batch: np.array([]) is 1-D
             return pd.Series([], dtype=object)
-        v = np.array(vecs.to_list(), dtype=np.float64)  # (n, dim)
-        sims = np.zeros((v.shape[0], cents.shape[0]), dtype=np.float64)
-        for i in range(v.shape[1]):
-            sims = sims + v[:, i:i + 1] * cents[:, i][None, :]
+        sims = _left_fold_dots(np.array(vecs.to_list(), dtype=np.float64), w_cols)
         # stable argsort desc: (-sim, centroid_id) lexicographic
         order = np.argsort(-sims, axis=1, kind="stable")[:, :kp].astype(np.int32)
         return pd.Series(list(order))
@@ -386,9 +349,10 @@ def ivf_assign_udf(centroids: np.ndarray, n_probe: int = 1):
 
 def ivf_fixed_centroids(dim: int = 64, n_lists: int = 8) -> np.ndarray:
     """Deterministic md5-derived unit centroids for PINNED-index IVF — the
-    same byte construction as ``_hyperplane`` under a distinct seed
-    namespace, L2-normalized (np.sqrt is correctly rounded, so the doubles
-    are platform-stable and their ``repr``s round-trip into SQL literals).
+    same byte construction as the LSH planes (``_md5_floats``) under a
+    distinct tag namespace, L2-normalized (np.sqrt is correctly rounded, so
+    the doubles are platform-stable and their ``repr``s round-trip into SQL
+    literals).
 
     These are random sphere directions, not data-derived: assignment
     quality is that of a random partition (fine for verifying the IVF
@@ -396,24 +360,31 @@ def ivf_fixed_centroids(dim: int = 64, n_lists: int = 8) -> np.ndarray:
     ``ann_ivf`` oracle row checks).  Production indexes use the Lloyd
     centroids of ``ivf_centroids``, whose recall is measured by
     ``ivf_recall`` in bench.py."""
-    import hashlib
+    return _unit_rows(np.array([_md5_floats(f"ivf-cent-{j}", dim)
+                                for j in range(n_lists)], dtype=np.float64))
 
-    rows = []
-    for j in range(n_lists):
-        vals: list = []
-        i = 0
-        while len(vals) < dim:
-            h = hashlib.md5(f"ivf-cent-{j}-{i}".encode()).digest()
-            for b in h:
-                vals.append((b / 255.0) - 0.5)
-                if len(vals) == dim:
-                    break
-            i += 1
-        rows.append(vals)
-    m = np.array(rows, dtype=np.float64)
-    n = np.linalg.norm(m, axis=1, keepdims=True)
-    n[n == 0] = 1.0
-    return m / n
+
+def _ivf_cands(candidates: DataFrame, centroids: "np.ndarray | None",
+               n_lists: int, n_iters: int, id_col: str, vec_col: str):
+    """(pinned or Lloyd centroids, candidate ``_side`` + its ONE nearest
+    ``cluster_id``) — a map; at 100 TB the index you materialize once."""
+    cents = (np.asarray(centroids, dtype=np.float64) if centroids is not None
+             else ivf_centroids(candidates, n_lists=n_lists, n_iters=n_iters,
+                                id_col=id_col, vec_col=vec_col))
+    probe1 = ivf_assign_udf(cents, n_probe=1)
+    return cents, _side(candidates, id_col, vec_col, "cand",
+                        F.get(probe1(F.col(vec_col)), 0).alias("cluster_id"))
+
+
+def _ivf_rank(queries: DataFrame, c: DataFrame, cents: np.ndarray,
+              n_probe: int, k: int, id_col: str, vec_col: str,
+              round_digits: int) -> DataFrame:
+    """Queries explode to n_probe (query, cluster) probes, broadcast
+    equi-joined to ``c`` on cluster_id (never all-pairs), then ranked."""
+    proben = ivf_assign_udf(cents, n_probe=n_probe)
+    q = _side(queries, id_col, vec_col, "query",
+              F.explode(proben(F.col(vec_col))).alias("cluster_id"))
+    return _rank(_cos(F.broadcast(q).join(c, on="cluster_id"), round_digits), k)
 
 
 def ivf_topk(queries: DataFrame, candidates: DataFrame, k: int = 3,
@@ -422,40 +393,10 @@ def ivf_topk(queries: DataFrame, candidates: DataFrame, k: int = 3,
              centroids: "np.ndarray | None" = None,
              round_digits: int = 4) -> DataFrame:
     """IVF ANN: exact cosine top-k restricted to each query's ``n_probe``
-    nearest inverted lists.  The candidate side gets ONE cluster id (a map —
-    at 100 TB this is the partitioned index you materialize once and reuse);
-    queries explode to n_probe (query, cluster) probes and the join is an
-    equi-join on cluster_id — never all-pairs.  Expected candidate fraction
-    scanned ~ n_probe/n_lists; accuracy via ``ivf_recall``."""
-    if centroids is None:
-        centroids = ivf_centroids(candidates, n_lists=n_lists, n_iters=n_iters,
-                                  id_col=id_col, vec_col=vec_col)
-    probe1 = ivf_assign_udf(centroids, n_probe=1)
-    proben = ivf_assign_udf(centroids, n_probe=n_probe)
-
-    c = candidates.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"),
-        l2_norm_kernel(F.col(vec_col)).alias("cn"),
-        F.get(probe1(F.col(vec_col)), 0).alias("cluster_id"))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        l2_norm_kernel(F.col(vec_col)).alias("qn"),
-        F.explode(proben(F.col(vec_col))).alias("cluster_id"))
-    scored = (
-        F.broadcast(q).join(c, on="cluster_id")
-        .where(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id", "cand_id",
-            F.round(dot_product_kernel(F.col("qv"), F.col("cv"))
-                    / (F.col("qn") * F.col("cn")), round_digits).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cos", "rank")
-    )
+    nearest inverted lists.  Expected candidate fraction scanned ~
+    n_probe/n_lists; accuracy via ``ivf_recall``."""
+    cents, c = _ivf_cands(candidates, centroids, n_lists, n_iters, id_col, vec_col)
+    return _ivf_rank(queries, c, cents, n_probe, k, id_col, vec_col, round_digits)
 
 
 def ivf_build_index(candidates: DataFrame, path: str,
@@ -471,19 +412,11 @@ def ivf_build_index(candidates: DataFrame, path: str,
     no pickles).  ``ivf_search`` then serves any number of query batches
     without recomputing assignments — the build-once/search-many split
     ``ivf_topk``'s one-shot signature cannot express."""
-    cents = (np.asarray(centroids, dtype=np.float64) if centroids is not None
-             else ivf_centroids(candidates, n_lists=n_lists, n_iters=n_iters,
-                                id_col=id_col, vec_col=vec_col))
-    probe1 = ivf_assign_udf(cents, n_probe=1)
-    assigned = candidates.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"),
-        l2_norm_kernel(F.col(vec_col)).alias("cn"),
-        F.get(probe1(F.col(vec_col)), 0).alias("cluster_id"))
+    cents, assigned = _ivf_cands(candidates, centroids, n_lists, n_iters,
+                                 id_col, vec_col)
     assigned.write.mode("overwrite").partitionBy("cluster_id").parquet(path)
-
-    spark = candidates.sparkSession
-    rows = [(int(j), [float(x) for x in cents[j]]) for j in range(cents.shape[0])]
-    spark.createDataFrame(rows, "cluster_id int, centroid array<double>") \
+    candidates.sparkSession.createDataFrame(
+        list(enumerate(cents.tolist())), "cluster_id int, centroid array<double>") \
         .coalesce(1).write.mode("overwrite").parquet(f"{path}/_centroids")
 
 
@@ -491,43 +424,20 @@ def ivf_search(spark, path: str, queries: DataFrame, k: int = 3,
                id_col: str = "vec_id", vec_col: str = "embedding",
                n_probe: int = 4, round_digits: int = 4) -> DataFrame:
     """Serve top-k from a materialized ``ivf_build_index`` directory.  The
-    probe restriction is a partition-pruned scan + broadcast equi-join on
-    cluster_id; scoring/rank semantics are identical to ``ivf_topk`` (same
-    kernels, same tie-break)."""
-    cent_rows = spark.read.parquet(f"{path}/_centroids").collect()
-    cents = np.zeros((len(cent_rows), len(cent_rows[0]["centroid"])))
-    for r in cent_rows:
-        cents[r["cluster_id"]] = r["centroid"]
-    proben = ivf_assign_udf(cents, n_probe=n_probe)
-
-    c = spark.read.parquet(path)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        l2_norm_kernel(F.col(vec_col)).alias("qn"),
-        F.explode(proben(F.col(vec_col))).alias("cluster_id"))
-    scored = (
-        F.broadcast(q).join(c, on="cluster_id")
-        .where(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id", "cand_id",
-            F.round(dot_product_kernel(F.col("qv"), F.col("cv"))
-                    / (F.col("qn") * F.col("cn")), round_digits).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cos", "rank")
-    )
+    probe restriction is a broadcast equi-join on cluster_id (partition
+    pruning of the scan is dropped, as in ``lsh_search``); scoring/rank
+    semantics are identical to ``ivf_topk`` (same kernels, same
+    tie-break)."""
+    cents = np.array([r["centroid"] for r in sorted(
+        spark.read.parquet(f"{path}/_centroids").collect(),
+        key=lambda r: r["cluster_id"])], dtype=np.float64)
+    return _ivf_rank(queries, spark.read.parquet(path), cents, n_probe, k,
+                     id_col, vec_col, round_digits)
 
 
 def ivf_recall(queries: DataFrame, candidates: DataFrame, k: int = 3,
                exact: "DataFrame | None" = None, **ivf_kwargs) -> float:
     """recall@k of the IVF path vs the brute-force baseline (same contract
     as ``lsh_recall``, including the precomputed-``exact`` amortization)."""
-    if exact is None:
-        exact = cosine_topk(queries, candidates, k=k).select("query_id", "cand_id")
-    approx = ivf_topk(queries, candidates, k=k, **ivf_kwargs) \
-        .select("query_id", "cand_id")
-    return _recall_vs_exact(exact, approx)
+    approx = ivf_topk(queries, candidates, k=k, **ivf_kwargs)
+    return _recall_vs_exact(queries, candidates, k, exact, approx)

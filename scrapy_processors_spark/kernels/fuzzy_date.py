@@ -107,12 +107,12 @@ _MONTHS = {
     "marts": 3,
     # uk (r05 widening #2) — genitive (dates: "5 березня 2021") +
     # nominative; no month name carries й/ё so the NFD fold is a no-op
-    # ("листопад(а)" shares the pl/cs key, same month)
+    # (Cyrillic "листопад(а)" is its own key: the pl/cs "listopad" is Latin)
     "січня": 1, "січень": 1, "лютого": 2, "лютий": 2, "березня": 3,
     "березень": 3, "квітня": 4, "квітень": 4, "травня": 5, "травень": 5,
     "червня": 6, "червень": 6, "липня": 7, "липень": 7, "серпня": 8,
     "серпень": 8, "вересня": 9, "вересень": 9, "жовтня": 10, "жовтень": 10,
-    "грудня": 12, "грудень": 12,
+    "листопада": 11, "листопад": 11, "грудня": 12, "грудень": 12,
     # el (r05 widening #2) — genitive + nominative, tonos-folded (NFD
     # strips the combining acute: ιανουαρίου -> ιανουαριου; μαΐου -> μαιου)
     "ιανουαριου": 1, "ιανουαριος": 1, "φεβρουαριου": 2, "φεβρουαριος": 2,

@@ -26,6 +26,31 @@ def plan_of(df) -> str:
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
 
+def prunes(p: str, *cols: str) -> bool:
+    """Every column in ``cols`` carries a live dynamic-pruning filter; a
+    filter Spark could not plan reads ``dynamicpruningexpression(true)``."""
+    return all(f"dynamicpruningexpression({c}#" in p for c in cols)
+
+
+def below(p: str, upper: str, lower: str) -> bool:
+    """Some node whose formatted details match ``upper`` has a node
+    matching ``lower`` in its subtree (regexes over one node's block)."""
+    tree, _, details = p.partition("\n\n\n")
+    blocks = (block.strip() for block in details.split("\n\n"))
+    info = {int(m.group(1)): block for block in blocks
+            if (m := re.match(r"\((\d+)\) ", block))}
+    nodes = [(len(line) - len(line.lstrip(" :+-")), int(m.group(1)))
+             for line in tree.splitlines() if (m := re.search(r"\((\d+)\)$", line))]
+    for i, (depth, nid) in enumerate(nodes):
+        if re.search(upper, info.get(nid, "")):
+            for d, sub in nodes[i + 1:]:
+                if d <= depth:
+                    break
+                if re.search(lower, info.get(sub, "")):
+                    return True
+    return False
+
+
 def main():
     from scrapy_processors_spark.session import get_spark
     import __spark_entry__ as entrymod
@@ -111,8 +136,22 @@ def main():
                            k=3, n_probe=2)
     add("ivf_search (materialized index)", ivfs, [
         ("dynamic partition pruning on cluster_id",
-         lambda p: "dynamicpruning" in p.lower()),
+         lambda p: prunes(p, "cluster_id")),
         ("broadcast probe join", lambda p: "Broadcast" in p),
+    ])
+
+    # 4c. materialized LSH index: the same pruning on (table_id, bucket),
+    # and the query side's norm kernel runs below the posexplode Generate
+    # (once per vector, not once per table)
+    _lidx = tempfile.mkdtemp() + "/lsh_idx"
+    _sim.lsh_build_index(_emb, _lidx)
+    lshs = _sim.lsh_search(spark, _lidx, _emb.where(F.col("vec_id") < 5), k=3)
+    add("lsh_search (materialized index)", lshs, [
+        ("dynamic partition pruning on (table_id, bucket)",
+         lambda p: prunes(p, "table_id", "bucket")),
+        ("query-side l2_norm_kernel below the posexplode Generate",
+         lambda p: below(p, r"^\(\d+\) Generate[\s\S]*posexplode",
+                         r"^\(\d+\) ArrowEvalPython[\s\S]*l2_norm_kernel")),
     ])
 
     # 5. ann_topk: broadcast of the small query side

@@ -5,6 +5,8 @@ declared schema."""
 import hashlib
 import re
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
@@ -55,6 +57,8 @@ def _reference_pairs(rows, num_hashes, bands):
     per_band = num_hashes // bands
     buckets = {}
     for doc_id, text in rows:
+        if text is None:  # null minhashes: no band key, no pair
+            continue
         sig = _lanes_signature(text, num_hashes)
         for b in range(bands):
             key = "".join(sig[b * per_band:(b + 1) * per_band])
@@ -66,7 +70,8 @@ def test_minhash_pairs_match_driver_reference(spark):
     """The band join equals a pure-Python LSH over the same lanes hashes, at
     two signature shapes and under both broadcast and sort-merge joins, and
     the kernel runs once: exactly one ArrowEvalPython in the executed plan
-    (the persisted signatures feed both join sides)."""
+    (the persisted signatures feed both join sides).  Null texts pair with
+    nothing, as in the DuckDB oracle's null-never-equal band join."""
     base = ("near duplicate pages share most of their shingles so banded "
             "minhash buckets collide for them with high probability today")
     rows = [(10 + k, base + f" variant{k}") for k in range(4)]   # near-dup cluster
@@ -81,6 +86,7 @@ def test_minhash_pairs_match_driver_reference(spark):
     rows += [(30, "an unrelated page about crawling frontiers and bloom filters"),
              (31, "another unrelated document on spark joins and shuffles"),
              (32, "word")]                                        # single shingle
+    rows += [(50, None), (51, None), (52, None)]                  # null texts
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     key = "spark.sql.autoBroadcastJoinThreshold"
     saved = spark.conf.get(key)
@@ -265,6 +271,55 @@ def test_ivf_index_build_search_equals_topk(spark, vecs, tmp_path):
         for r in similarity.ivf_topk(queries, vecs, k=3, n_lists=8,
                                      n_probe=2, centroids=cents).collect())
     assert got == want and got
+
+
+def _fold_fixture(n=1100, dim=64):
+    """n x dim vectors (n crosses the 512-row block edge) and six LSH planes
+    as (dim, 6) columns; every third row is projected onto the orthogonal
+    complement of one plane, so its dot with that plane is a rounding
+    residue whose sign depends on the summation order."""
+    rng = np.random.default_rng(15)
+    w = np.array(similarity.lsh_tables(dim, 3, 2)).reshape(6, dim).T.copy()
+    v = rng.standard_normal((n, dim))
+    for r in range(0, n, 3):
+        wj = w[:, (r // 3) % 6]
+        v[r] -= (v[r] @ wj) / (wj @ wj) * wj
+    return v, w
+
+
+def test_left_fold_dots_is_sequential_left_fold():
+    """``_left_fold_dots`` equals a pure-Python left fold from 0.0 in
+    dimension order bit for bit — the order the DuckDB oracles replay —
+    across the row-block edge and on near-zero projections."""
+    v, w = _fold_fixture()
+    want = []
+    for row in v.tolist():
+        cells = []
+        for col in w.T.tolist():
+            acc = 0.0
+            for x, y in zip(row, col):
+                acc = acc + x * y
+            cells.append(acc)
+        want.append(cells)
+    want = np.array(want)
+    near = np.abs(want) < 1e-12
+    assert near.sum() >= 300 and (want[near] > 0).any() and (want[near] < 0).any()
+    assert similarity._left_fold_dots(v, w).tobytes() == want.tobytes()
+
+
+def test_ivf_assign_matches_unblocked_fold():
+    """``ivf_assign_udf`` on the shared blocked fold gives the same sims
+    (bit for bit) and probe order as the unblocked per-dimension loop it
+    replaced, on the same 1,100 rows."""
+    v, _ = _fold_fixture()
+    cents = similarity.ivf_fixed_centroids(dim=64, n_lists=8)
+    sims = np.zeros((len(v), len(cents)))
+    for i in range(v.shape[1]):
+        sims = sims + v[:, i:i + 1] * cents[:, i][None, :]
+    assert similarity._left_fold_dots(v, cents.T.copy()).tobytes() == sims.tobytes()
+    want = np.argsort(-sims, axis=1, kind="stable")[:, :3]
+    got = similarity.ivf_assign_udf(cents, n_probe=3).func(pd.Series(list(v)))
+    assert np.array_equal(np.stack(got.to_list()), want)
 
 
 def test_simhash_kernel_matches_fold(docs):

@@ -207,6 +207,9 @@ DTE_CASES = [
      datetime(2019, 8, 15, 5, 0, tzinfo=UTC)),  # CDT: UTC-5
     ("१ दिसंबर २०१४ 10:55", {"languages": ["hi"]},
      datetime(2014, 12, 1, 16, 55, tzinfo=UTC)),
+    # uk November, Cyrillic genitive (kept last: parametrize ids are by index)
+    ("15 листопада 2019", {"languages": ["uk"]},
+     datetime(2019, 11, 15, 6, 0, tzinfo=UTC)),  # CST: UTC-6
 ]
 
 
