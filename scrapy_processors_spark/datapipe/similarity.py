@@ -25,13 +25,14 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from scrapy_processors_spark.datapipe.dedup import dot_product_kernel, l2_norm_kernel
+from scrapy_processors_spark.datapipe.dedup import (
+    _left_fold_dots, _matrix, dot_product_kernel, l2_norm_kernel)
 
 
 def _side(df: DataFrame, id_col: str, vec_col: str, role: str, *extra) -> DataFrame:
@@ -115,25 +116,20 @@ def _unit_rows(m: np.ndarray) -> np.ndarray:
     return m / n
 
 
-def _left_fold_dots(v: np.ndarray, w_cols: np.ndarray) -> np.ndarray:
-    """``v @ w_cols`` (n, dim) x (dim, m), every cell a sequential left fold
-    from 0.0 in dimension order — the IEEE order the DuckDB oracles'
-    ``list_reduce(list_prepend(0.0, ...))`` replays bit for bit (np.dot/BLAS
-    would reorder the sum and could flip a near-zero projection's sign).
-    r6: 512-row blocks, one in-place add per dimension (264 -> 142 ms on
-    20k rows vs reallocating (n, m) per dimension); same order per cell."""
-    n, m = v.shape[0], w_cols.shape[1]
-    acc = np.empty((n, m), dtype=np.float64)
-    B = 512
-    for s0 in range(0, n, B):
-        blk = v[s0:s0 + B]
-        sub = np.zeros((blk.shape[0], m), dtype=np.float64)
-        tmp = np.empty_like(sub)
-        for i in range(w_cols.shape[0]):
-            np.multiply(blk[:, i:i + 1], w_cols[i][None, :], out=tmp)
-            sub += tmp
-        acc[s0:s0 + B] = sub
-    return acc
+def _dense(vecs: pa.Array, kernel: str) -> np.ndarray:
+    """The (n, dim) ``_matrix`` of a batch of vectors.  A null vector, a
+    null element or a ragged batch raises ``ValueError``: such a row has no
+    bucket or list to go to."""
+    m = _matrix(vecs)
+    if m is None or not m[0].all():
+        raise ValueError(f"{kernel}: null or ragged vectors in the batch")
+    return m[1]
+
+
+def _int_lists(rows: np.ndarray) -> pa.Array:
+    """An (n, w) int matrix as n list<int32> rows."""
+    return pa.FixedSizeListArray.from_arrays(
+        pa.array(rows.ravel(), pa.int32()), rows.shape[1]).cast(pa.list_(pa.int32()))
 
 
 # --------------------------------------------------------------------- LSH
@@ -146,7 +142,7 @@ def lsh_tables(dim: int, n_planes: int, n_tables: int) -> list:
 
 
 def lsh_buckets_udf(tables: list, dim: int):
-    """All per-table bucket ids in ONE Arrow-batched pandas UDF.
+    """All per-table bucket ids in ONE Arrow UDF.
 
     The pure-Column alternative (n_tables * n_planes ``F.aggregate`` folds of
     ``dim`` literal terms each) builds a ~20k-node expression tree that blows
@@ -160,14 +156,11 @@ def lsh_buckets_udf(tables: list, dim: int):
     w_cols = np.ascontiguousarray(weights.reshape(n_tables * n_planes, dim_w).T)
     powers = (1 << np.arange(n_planes, dtype=np.int32))
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def buckets(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):  # empty Arrow batch: np.array([]) is 1-D
-            return pd.Series([], dtype=object)
-        v = np.array(vecs.to_list(), dtype=np.float64)  # (n, dim)
+    @F.arrow_udf(T.ArrayType(T.IntegerType()))
+    def buckets(vecs: pa.Array) -> pa.Array:
+        v = _dense(vecs, "lsh_buckets_udf")
         bits = (_left_fold_dots(v, w_cols) > 0).reshape(len(v), n_tables, n_planes)
-        out = (bits * powers[None, None, :]).sum(axis=2).astype(np.int32)
-        return pd.Series(list(out))
+        return _int_lists((bits * powers[None, None, :]).sum(axis=2))
 
     return buckets
 
@@ -335,14 +328,11 @@ def ivf_assign_udf(centroids: np.ndarray, n_probe: int = 1):
     kp = min(n_probe, cents.shape[0])
     w_cols = np.ascontiguousarray(cents.T)  # (dim, n_lists)
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def assign(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):  # empty Arrow batch: np.array([]) is 1-D
-            return pd.Series([], dtype=object)
-        sims = _left_fold_dots(np.array(vecs.to_list(), dtype=np.float64), w_cols)
+    @F.arrow_udf(T.ArrayType(T.IntegerType()))
+    def assign(vecs: pa.Array) -> pa.Array:
+        sims = _left_fold_dots(_dense(vecs, "ivf_assign_udf"), w_cols)
         # stable argsort desc: (-sim, centroid_id) lexicographic
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :kp].astype(np.int32)
-        return pd.Series(list(order))
+        return _int_lists(np.argsort(-sims, axis=1, kind="stable")[:, :kp])
 
     return assign
 
@@ -380,10 +370,11 @@ def _ivf_rank(queries: DataFrame, c: DataFrame, cents: np.ndarray,
               n_probe: int, k: int, id_col: str, vec_col: str,
               round_digits: int) -> DataFrame:
     """Queries explode to n_probe (query, cluster) probes, broadcast
-    equi-joined to ``c`` on cluster_id (never all-pairs), then ranked."""
+    equi-joined to ``c`` on cluster_id (never all-pairs), then ranked.  The
+    norm sits below the Generate, so it runs once per query, not per probe."""
     proben = ivf_assign_udf(cents, n_probe=n_probe)
-    q = _side(queries, id_col, vec_col, "query",
-              F.explode(proben(F.col(vec_col))).alias("cluster_id"))
+    q = _side(queries, id_col, vec_col, "query").select(
+        "*", F.explode(proben(F.col("qv"))).alias("cluster_id"))
     return _rank(_cos(F.broadcast(q).join(c, on="cluster_id"), round_digits), k)
 
 

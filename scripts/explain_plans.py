@@ -124,7 +124,9 @@ def main():
 
     # 4b. materialized IVF index: the probe join must dynamic-partition-prune
     # the cluster_id-partitioned candidate scan (file-level pruning — the
-    # property that makes n_probe/n_lists the scan fraction at 100 TB)
+    # property that makes n_probe/n_lists the scan fraction at 100 TB), and
+    # the query side's norm kernel runs below the explode Generate (once
+    # per query, not once per probe)
     import tempfile
 
     from scrapy_processors_spark.datapipe import similarity as _sim
@@ -138,6 +140,9 @@ def main():
         ("dynamic partition pruning on cluster_id",
          lambda p: prunes(p, "cluster_id")),
         ("broadcast probe join", lambda p: "Broadcast" in p),
+        ("query-side l2_norm_kernel below the explode Generate",
+         lambda p: below(p, r"^\(\d+\) Generate[\s\S]*explode",
+                         r"^\(\d+\) ArrowEvalPython[\s\S]*l2_norm_kernel")),
     ])
 
     # 4c. materialized LSH index: the same pruning on (table_id, bucket),
@@ -259,6 +264,9 @@ def main():
         ("broadcast hash join on cluster_id",
          lambda p: "BroadcastHashJoin" in p and "cluster_id" in p),
         ("top-k rank window present", lambda p: "row_number" in p),
+        ("query-side l2_norm_kernel below the explode Generate",
+         lambda p: below(p, r"^\(\d+\) Generate[\s\S]*explode",
+                         r"^\(\d+\) ArrowEvalPython[\s\S]*l2_norm_kernel")),
     ])
 
     n_fail = sum(1 for _, _, ok in checks if not ok)

@@ -6,7 +6,7 @@ import hashlib
 import re
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from pyspark.sql import functions as F
@@ -318,8 +318,45 @@ def test_ivf_assign_matches_unblocked_fold():
         sims = sims + v[:, i:i + 1] * cents[:, i][None, :]
     assert similarity._left_fold_dots(v, cents.T.copy()).tobytes() == sims.tobytes()
     want = np.argsort(-sims, axis=1, kind="stable")[:, :3]
-    got = similarity.ivf_assign_udf(cents, n_probe=3).func(pd.Series(list(v)))
-    assert np.array_equal(np.stack(got.to_list()), want)
+    got = similarity.ivf_assign_udf(cents, n_probe=3).func(pa.array(v.tolist()))
+    assert np.array_equal(np.array(got.to_pylist()), want)
+
+
+def test_vector_kernels_on_batch_edges():
+    """The Arrow kernels on the batches ``_matrix`` must get right: empty,
+    all-null, a null vector among dense rows, ragged, and a sliced
+    ``ListArray`` (offset > 0).  Dot and norm equal the per-row fold row
+    by row; the LSH and IVF kernels map an empty batch to an empty list
+    array and reject null or ragged vectors."""
+    f64 = pa.list_(pa.float64())
+    batches = {
+        "empty": pa.array([], f64),
+        "all-null": pa.array([None, None, None], f64),
+        "null vector": pa.array([[1.0, 2.0, 3.0], None, [0.1, -0.2, 0.3]]),
+        "ragged": pa.array([[1.0, 2.0], [1.0, 2.0, 3.0], None]),
+        "sliced": pa.array([[9.0, 9.0, 9.0], None, [1e16, 1.0, -1e16],
+                            [0.1, 0.2, 0.3]]).slice(1),
+    }
+    assert batches["sliced"].offset == 1
+    for name, a in batches.items():
+        b = pa.array([None if r is None else r[::-1] for r in a.to_pylist()], a.type)
+        rows = a.to_pylist()
+        want_dot = [dedup._fold_dot_one(x, y) for x, y in zip(rows, b.to_pylist())]
+        want_n = [None if d is None else float(np.sqrt(d))
+                  for d in (dedup._fold_dot_one(x, x) for x in rows)]
+        assert dedup.dot_product_kernel.func(a, b).to_pylist() == want_dot, name
+        assert dedup.l2_norm_kernel.func(a).to_pylist() == want_n, name
+    buckets = similarity.lsh_buckets_udf(similarity.lsh_tables(3, 2, 4), 3)
+    assign = similarity.ivf_assign_udf(similarity.ivf_fixed_centroids(3, 4), 2)
+    for kernel in (buckets.func, assign.func):
+        out = kernel(batches["empty"])
+        assert len(out) == 0 and out.type == pa.list_(pa.int32())
+        for name in ("all-null", "null vector", "ragged"):
+            with pytest.raises(ValueError):
+                kernel(batches[name])
+    sliced = batches["sliced"].slice(1)  # offset 2, dense
+    assert (assign.func(sliced).to_pylist()
+            == assign.func(pa.array(sliced.to_pylist())).to_pylist())
 
 
 def test_simhash_kernel_matches_fold(docs):
@@ -585,8 +622,8 @@ def test_cosine_kernels_match_folds(spark):
     not approximately equal) to the F.aggregate fold spec — the kernel
     accumulates per dimension to preserve the fold's left-to-right IEEE
     order.  Covers dense rows, a null vector, ragged lengths (fold yields
-    null via zip_with padding), and magnitudes that would differ under a
-    reordered (pairwise/BLAS) sum.  Zero-norm vectors are out of scope for
+    null via zip_with padding), a null element (null in both), and
+    magnitudes that would differ under a reordered (pairwise/BLAS) sum.  Zero-norm vectors are out of scope for
     a value check: the division is the same JVM Column op in both paths,
     so under ANSI mode both raise DIVIDE_BY_ZERO identically."""
     rows = [
@@ -594,6 +631,7 @@ def test_cosine_kernels_match_folds(spark):
         (1, [1e16, 1.0, -1e16, 1.0], [1.0, 1.0, 1.0, 1.0]),   # order-sensitive
         (2, None, [1.0, 2.0, 3.0, 4.0]),                       # null vector
         (3, [1.0, 2.0], [1.0, 2.0, 3.0]),                      # ragged
+        (4, [1.0, None, 3.0], [1.0, 1.0, 1.0]),                # null element
         (5, [0.1] * 64, [0.3] * 64),
     ]
     df = spark.createDataFrame(
